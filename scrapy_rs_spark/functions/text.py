@@ -16,17 +16,22 @@ Pinned text algorithm:
 
 Link extraction: every href attribute of <a> tags in document order.
 
-Both are Arrow-batched pandas UDFs (Series→Series) — the only Python on
-the parse hot path, per input_hint.
+Both are Arrow-batched pandas UDFs (Series→Series). The crawl engine's
+default parse uses parse_resolve_udf instead: text and links from one
+HTML pass, with the links resolved to canonical absolute URLs inside
+the same Python worker call — the only Python on the parse hot path.
 """
 
 from __future__ import annotations
 
 from html.parser import HTMLParser
 
+import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
+
+from scrapy_rs_spark.functions.url import resolve_series
 
 _SKIP_TAGS = {"script", "style"}
 
@@ -172,33 +177,38 @@ _PAGE_STRUCT = StructType(
 
 
 @pandas_udf(_PAGE_STRUCT)
-def parse_page_udf(html: pd.Series) -> pd.DataFrame:
-    parsed = html.map(parse_page)
-    return pd.DataFrame(
-        {"text": parsed.map(lambda t: t[0]), "links": parsed.map(lambda t: t[1])}
-    )
+def parse_resolve_udf(
+    html: pd.Series, encoding: pd.Series, base: pd.Series
+) -> pd.DataFrame:
+    """The engine's default parse in ONE Python pass per page: text plus
+    outgoing links already resolved against ``base`` (the page's
+    url_canon) and canonicalized, unresolvable hrefs dropped, document
+    order kept. ``encoding`` is the per-request decode override
+    (frontier column; NULL → strict UTF-8, request.rs:74-90).
 
-
-@pandas_udf(_PAGE_STRUCT)
-def parse_page_enc_udf(html: pd.Series, encoding: pd.Series) -> pd.DataFrame:
-    """parse_page with a per-row decode override (frontier `encoding`
-    column; NULL → strict UTF-8). The engine's default parse uses this
-    so a shift-jis page fetched by a request that declared its encoding
-    still extracts text instead of landing in the error channel. A
-    batch with no overrides (the common case) takes the exact same
-    map() path as parse_page_udf — zero cost for the feature."""
+    Byte-identical to parse_page → explode → urljoin_udf → drop NULL:
+    each batch's hrefs are flattened and resolved by the same
+    vectorized resolve_series urljoin_udf wraps, then regrouped per
+    page."""
     if encoding.isna().all():
-        parsed = html.map(parse_page)
-        return pd.DataFrame(
-            {
-                "text": parsed.map(lambda t: t[0]),
-                "links": parsed.map(lambda t: t[1]),
-            }
-        )
-    parsed = [
-        parse_page(h, e if isinstance(e, str) and e else None)
-        for h, e in zip(html, encoding)
-    ]
-    return pd.DataFrame(
-        {"text": [t[0] for t in parsed], "links": [t[1] for t in parsed]}
+        parsed = [parse_page(h) for h in html]
+    else:
+        parsed = [
+            parse_page(h, e if isinstance(e, str) and e else None)
+            for h, e in zip(html, encoding)
+        ]
+    counts = [len(links) for _, links in parsed]
+    hrefs = [href for _, links in parsed for href in links]
+    resolved = (
+        resolve_series(
+            pd.Series(np.repeat(base.to_numpy(dtype=object), counts)),
+            pd.Series(hrefs, dtype="object"),
+        ).tolist()
+        if hrefs
+        else []
     )
+    links, pos = [], 0
+    for n in counts:
+        links.append([u for u in resolved[pos : pos + n] if u is not None])
+        pos += n
+    return pd.DataFrame({"text": [t for t, _ in parsed], "links": links})

@@ -170,11 +170,17 @@ _CANON_REL_BASE = re.compile(
     r"(?:[A-Za-z0-9_\-.~!$&'()*+,=:@]+(?:/[A-Za-z0-9_\-.~!$&'()*+,=:@]+)*/?)?$"
 )
 _AFTER_LAST_SLASH = re.compile(r"[^/]*$")
+# absolute href already in canonical form: canonical http(s) origin (as
+# _ORIGIN) followed by an absolute-path href that passes _FAST_HREF. It
+# resolves to itself against any non-NULL base: urljoin returns it (or
+# re-assembles the same parts) and canonicalize leaves it untouched.
+# The dot-segment and '//' exclusions apply to the part after the origin.
+_ABS_HREF = re.compile(r"^https?://[a-z0-9.\-]+" + _FAST_HREF.pattern[1:])
 
 
-@pandas_udf(StringType())
-def urljoin_udf(base: pd.Series, href: pd.Series) -> pd.Series:
-    """Vectorized resolve. The three dominant shapes on a real crawl are
+def resolve_series(base: pd.Series, href: pd.Series) -> pd.Series:
+    """Vectorized resolve (the body of urljoin_udf, callable from other
+    pandas UDFs). The three dominant shapes on a real crawl are
     handled as pandas string ops:
 
       * absolute-path hrefs ("/a/b", "/a?x=1") against a canonical
@@ -184,6 +190,8 @@ def urljoin_udf(base: pd.Series, href: pd.Series) -> pd.Series:
         dir(base) + href
       * bare-query hrefs ("?page=2") against a canonical base →
         base + href
+      * absolute hrefs already in canonical form
+        ("http://h.test/a/b") → href
 
     Anything unusual (dot segments, %-escapes, fragments, other
     schemes, ';', empty path segments, non-canonical bases) takes the
@@ -243,9 +251,23 @@ def urljoin_udf(base: pd.Series, href: pd.Series) -> pd.Series:
         if qry.any():
             out[qry] = base_s[qry] + href_s[qry]
         handled = handled | qry
+    absn = ~handled & href_s.str.match(_ABS_HREF, na=False) & base_s.notna()
+    if absn.any():
+        tail = path_part.str.replace(_ORIGIN, "", regex=True)
+        absn &= ~tail.str.contains(_DOT_SEG, na=True) & ~tail.str.contains(
+            "//", regex=False, na=True
+        )
+        out[absn] = href_s[absn]
+        handled = handled | absn
     for i in out.index[~handled]:
         out[i] = resolve(base_s[i], href_s[i])
     return out
+
+
+@pandas_udf(StringType())
+def urljoin_udf(base: pd.Series, href: pd.Series) -> pd.Series:
+    """resolve_series as an Arrow-batched pandas UDF."""
+    return resolve_series(base, href)
 
 
 def url_hash_expr(url_canon: Column | str, method: Column | str) -> Column:

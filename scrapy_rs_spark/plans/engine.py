@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from scrapy_rs_spark.functions.text import (
     extract_links_udf,
     extract_text_udf,
-    parse_page_enc_udf,
+    parse_resolve_udf,
 )
 from scrapy_rs_spark.functions.url import urljoin_udf, url_hash_expr
 from scrapy_rs_spark.operators.dedup import anti_join_seen, dedup_in_batch
@@ -658,20 +658,24 @@ class CrawlEngine:
         else:
             transport_fields = F.lit(None).cast("map<string,string>")
         if self._default_parse:
-            # single-pass parse: text+links in ONE UDF over each page,
-            # materialized once (html dropped immediately after) — both
-            # the items write and the link expansion read the result
+            # single-pass parse: text + RESOLVED links in ONE UDF over
+            # each page, materialized once (html dropped immediately
+            # after) — the items write and the link expansion both read
+            # the result. Link resolution is fused into the parse UDF on
+            # purpose: a separate urljoin_udf over the exploded links is
+            # extracted by Catalyst twice (once for the `url IS NOT NULL`
+            # filter, once for the projection), so every link would
+            # cross into Python two more times per round.
             parsed = success.select(
                 "url",
-                "url_canon",
                 "depth",
                 "cookies",
                 transport_fields.alias("__tf"),
                 # per-request decode override (request.rs:74-90):
                 # encoding NULL → strict UTF-8, like the reference
-                parse_page_enc_udf(F.col("html"), F.col("encoding")).alias(
-                    "p"
-                ),
+                parse_resolve_udf(
+                    F.col("html"), F.col("encoding"), F.col("url_canon")
+                ).alias("p"),
                 # lazy: the items write materializes the parse; the link
                 # expansion then reads the cached result
             ).localCheckpoint(eager=False)
@@ -682,11 +686,11 @@ class CrawlEngine:
                 F.col("__tf").alias("fields"),
                 F.lit(rnd).alias("rnd"),
             )
-            raw_links = parsed.select(
-                F.col("url_canon").alias("base"),
+            # links arrive canonical with unresolvable hrefs dropped
+            links = parsed.select(
                 F.col("depth").alias("parent_depth"),
                 F.col("cookies").alias("parent_cookies"),
-                F.explode(F.col("p.links")).alias("href"),
+                F.explode(F.col("p.links")).alias("url"),
             )
         else:
             # a custom parse_fields_udf owns the fields map; otherwise
@@ -703,11 +707,17 @@ class CrawlEngine:
                 fields_col.alias("fields"),
                 F.lit(rnd).alias("rnd"),
             )
-            raw_links = success.select(
-                F.col("url_canon").alias("base"),
-                F.col("depth").alias("parent_depth"),
-                F.col("cookies").alias("parent_cookies"),
-                F.explode(self.parse_links_udf(F.col("html"))).alias("href"),
+            links = (
+                success.select(
+                    F.col("url_canon").alias("base"),
+                    F.col("depth").alias("parent_depth"),
+                    F.col("cookies").alias("parent_cookies"),
+                    F.explode(self.parse_links_udf(F.col("html"))).alias(
+                        "href"
+                    ),
+                )
+                .withColumn("url", urljoin_udf(F.col("base"), F.col("href")))
+                .filter(F.col("url").isNotNull())
             )
         # invalid-UTF-8 / unparsable pages yield text NULL → routed to
         # the error channel (functions/text.py contract), never written
@@ -726,9 +736,6 @@ class CrawlEngine:
             items = self.item_pipelines(items)  # X4
             obs_out = Observation(f"items_out_r{rnd}")
             items = items.observe(obs_out, F.count(F.lit(1)).alias("n"))
-        links = raw_links.withColumn(
-            "url", urljoin_udf(F.col("base"), F.col("href"))
-        ).filter(F.col("url").isNotNull())
         # ONE Project node in FRONTIER_COLS order — a withColumn chain
         # here adds ~16 nested Projects that Catalyst must analyze and
         # collapse EVERY round; measured ~1.5 s/round of pure planning

@@ -21,7 +21,13 @@ an Iceberg snapshot commit; resume reads the max committed round
 Seen-set = union of seen_delta across committed rounds, hash-bucketed by
 ``pmod(url_hash, seen_buckets)`` so membership probes prune buckets and
 the anti-join co-partitions. Deltas keep commits O(new urls), not
-O(total seen); `compact_seen` folds deltas when they pile up.
+O(total seen); `compact_seen` folds deltas when they pile up. The fold
+is tiered so its cost also tracks the new URLs: when the deltas other
+than the largest hold fewer bytes than the largest, only those small
+deltas are folded and the large base delta is left as it is; otherwise
+everything is folded. Delta writes and folds use
+``min(seen_buckets, defaultParallelism)`` writer tasks, one file per
+bucket.
 
 Reading state back each round also truncates DataFrame lineage — the
 iterative-loop plan would otherwise grow unboundedly.
@@ -39,6 +45,14 @@ from pyspark.sql import functions as F
 from scrapy_rs_spark.schemas import FRONTIER_DDL
 
 MANIFEST = "MANIFEST.json"
+
+
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, files in os.walk(path)
+        for f in files
+    )
 
 
 class CrawlStore:
@@ -69,6 +83,26 @@ class CrawlStore:
         os.makedirs(self._rounds_dir(), exist_ok=True)
         if bucketed_seen:
             self._ensure_seen_table()
+        else:
+            self._recover_seen_delta_dirs()
+
+    def _recover_seen_delta_dirs(self) -> None:
+        """Crash recovery for compact_seen's swap: the fold is fully
+        written to ``seen_delta_compact`` BEFORE the target round's
+        ``seen_delta`` is renamed to ``seen_delta_old`` and the fold
+        renamed into its place. A crash between the two renames leaves
+        the target round with no ``seen_delta`` — its hashes would drop
+        out of the seen set and be re-enqueued. Restore the fold (the
+        newer state), else the backup; then drop leftover side dirs."""
+        for name in os.listdir(self._rounds_dir()):
+            d = os.path.join(self._rounds_dir(), name)
+            main = os.path.join(d, "seen_delta")
+            tmp = os.path.join(d, "seen_delta_compact")
+            bak = os.path.join(d, "seen_delta_old")
+            if not os.path.isdir(main) and os.path.isdir(bak):
+                os.replace(tmp if os.path.isdir(tmp) else bak, main)
+            shutil.rmtree(tmp, ignore_errors=True)
+            shutil.rmtree(bak, ignore_errors=True)
 
     # ---- bucketed seen table ----
     @property
@@ -180,6 +214,9 @@ class CrawlStore:
     def _round_dir(self, rnd: int) -> str:
         return os.path.join(self._rounds_dir(), f"round={rnd:06d}")
 
+    def _seen_delta_dir(self, rnd: int) -> str:
+        return os.path.join(self._round_dir(rnd), "seen_delta")
+
     def committed_rounds(self) -> list[int]:
         out = []
         if not os.path.isdir(self._rounds_dir()):
@@ -201,10 +238,18 @@ class CrawlStore:
         (write_items before commit_round) start from a clean dir. The
         (empty) dir is created so a round whose parquet all lands
         elsewhere (bucketed seen table) can still seal metrics/MANIFEST
-        into it."""
+        into it.
+
+        A leftover round dir means an earlier attempt crashed after
+        begin_round; in the bucketed layout that attempt may also have
+        appended seen rows tagged with this round. Those files are
+        deleted too, or the re-run's lineage would count the round's
+        seen delta twice."""
         d = self._round_dir(rnd)
         if os.path.exists(d):
             shutil.rmtree(d)  # re-running an uncommitted round is safe
+            if self.bucketed_seen:
+                self._drop_bucketed_round(rnd)
         os.makedirs(d, exist_ok=True)
 
     def write_items(self, rnd: int, items: DataFrame | None) -> None:
@@ -239,20 +284,38 @@ class CrawlStore:
             # until MANIFEST lands
             self._append_seen_bucketed(seen_delta, rnd)
             return
-        (
+        self._write_seen_buckets(
             seen_delta.withColumn(
                 "bucket",
                 F.pmod(
                     F.col("url_hash"), F.lit(self.seen_buckets)
                 ).cast("int"),
-            )
-            # cluster rows by bucket before the partitioned write: one
-            # file per bucket instead of (tasks × buckets) small files
-            .repartition(self.seen_buckets, F.col("bucket"))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(os.path.join(self._round_dir(rnd), "seen_delta"))
+            ),
+            self._seen_delta_dir(rnd),
         )
+
+    def _write_seen_buckets(
+        self, df: DataFrame, path: str, dedup: bool = False
+    ) -> None:
+        """Write (url_hash, bucket) rows partitioned by bucket. Rows are
+        clustered by bucket first, so each bucket lands in exactly one
+        writer task and one file instead of (tasks × buckets) small
+        files. Writer tasks = min(seen_buckets, defaultParallelism):
+        one task per bucket would run a round's few thousand rows as
+        several waves of tiny tasks. dedup=True drops duplicate hashes
+        in the same shuffle — the bucket is a function of url_hash, so
+        the bucket clustering already co-locates duplicates."""
+        k = max(
+            1,
+            min(
+                self.seen_buckets,
+                self.spark.sparkContext.defaultParallelism,
+            ),
+        )
+        df = df.select("url_hash", "bucket").repartition(k, F.col("bucket"))
+        if dedup:
+            df = df.dropDuplicates(["bucket", "url_hash"])
+        df.write.mode("overwrite").partitionBy("bucket").parquet(path)
 
     def commit_round(
         self,
@@ -329,7 +392,7 @@ class CrawlStore:
         if upto_round is not None:
             rounds = [r for r in rounds if r <= upto_round]
         paths = [
-            os.path.join(self._round_dir(r), "seen_delta") for r in rounds
+            self._seen_delta_dir(r) for r in rounds
         ]
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
@@ -355,14 +418,14 @@ class CrawlStore:
         return {
             r
             for r in self.committed_rounds()
-            if os.path.isdir(os.path.join(self._round_dir(r), "seen_delta"))
+            if os.path.isdir(self._seen_delta_dir(r))
         }
 
     def load_seen_delta(self, rnd: int) -> DataFrame | None:
         """One committed round's seen delta (None if compacted away) —
         lets callers maintain an incrementally-extended seen DataFrame
         instead of re-listing every delta directory each round."""
-        p = os.path.join(self._round_dir(rnd), "seen_delta")
+        p = self._seen_delta_dir(rnd)
         if not os.path.isdir(p):
             return None
         return (
@@ -393,38 +456,58 @@ class CrawlStore:
         os.replace(tmp, p)
 
     def compact_seen(self) -> None:
-        """Fold all committed seen deltas into the latest round's delta
-        (Iceberg analogue: rewrite_data_files / snapshot expiry).
+        """Fold committed seen deltas (Iceberg analogue:
+        rewrite_data_files / snapshot expiry), tiered by size so the
+        cost tracks the recent deltas, not the whole seen set.
 
-        Keeps load_seen O(1 read) instead of O(rounds). Crash-safe by
-        ordering: the full union is written to a side dir first, swapped
-        into the latest round, THEN earlier deltas are removed — a crash
-        between swap and removal only leaves duplicate url_hash rows,
-        which are harmless to anti-join membership. Bumps
-        seen_generation() last so incremental-cache holders notice the
-        in-place rewrite of the newest delta dir."""
+        Rule: let B be the largest delta (by bytes on disk). If the
+        other deltas together hold fewer bytes than B, fold only those,
+        into the newest of them, and leave B untouched — a standing
+        crawl's big base is then rewritten only when the recent deltas
+        have grown past it. Otherwise fold every delta into the newest
+        one. Duplicate url_hash rows are dropped within the folded set
+        only; a duplicate between B and a small delta (left by a crash
+        window, see below) survives until an all-fold, which is
+        harmless to anti-join membership.
+
+        Keeps load_seen a few reads wide instead of O(rounds).
+        Crash-safe by ordering: the folded union is written to a side
+        dir first, swapped into the target round, THEN the other folded
+        deltas are removed — a crash between swap and removal only
+        leaves duplicate url_hash rows. Bumps seen_generation() last so
+        incremental-cache holders notice the in-place rewrite of the
+        target delta dir."""
         if self.bucketed_seen:
             self._compact_seen_bucketed()
             return
-        rounds = self.committed_rounds()
-        if len(rounds) < 2:
+        sizes = {
+            r: _dir_bytes(self._seen_delta_dir(r))
+            for r in self.seen_delta_rounds()
+        }
+        base = max(sizes, key=lambda r: (sizes[r], r), default=None)
+        small = sorted(r for r in sizes if r != base)
+        if sum(sizes[r] for r in small) < sizes.get(base, 0):
+            fold = small
+        else:
+            fold = sorted(sizes)
+        if len(fold) < 2:
             return
-        last = rounds[-1]
-        union = self.load_seen().dropDuplicates(["url_hash"])
-        last_dir = self._round_dir(last)
-        tmp = os.path.join(last_dir, "seen_delta_compact")
-        union.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        old = os.path.join(last_dir, "seen_delta")
-        bak = os.path.join(last_dir, "seen_delta_old")
+        target = fold[-1]
+        union = None
+        for r in fold:
+            df = self.load_seen_delta(r)
+            union = df if union is None else union.unionByName(df)
+        target_dir = self._round_dir(target)
+        tmp = os.path.join(target_dir, "seen_delta_compact")
+        self._write_seen_buckets(union, tmp, dedup=True)
+        old = self._seen_delta_dir(target)
+        bak = os.path.join(target_dir, "seen_delta_old")
         if os.path.isdir(old):
             os.replace(old, bak)
         os.replace(tmp, old)
         shutil.rmtree(bak, ignore_errors=True)
-        for r in rounds[:-1]:
-            shutil.rmtree(
-                os.path.join(self._round_dir(r), "seen_delta"),
-                ignore_errors=True,
-            )
+        for r in fold[:-1]:
+            shutil.rmtree(self._seen_delta_dir(r), ignore_errors=True)
         self._bump_seen_generation()
 
     def _compact_seen_bucketed(self) -> None:
@@ -569,17 +652,12 @@ class CrawlStore:
             out.extend(self._bucketed_delta_lineage(rnd))
         return out
 
-    def _bucketed_delta_lineage(self, rnd: int) -> list[dict]:
-        """Lineage for a bucketed-seen append: the round's delta rows
-        live inside the shared bucketed table, so the round's files are
-        identified by their footer statistics (every row group has
-        round min == max == rnd — each append writes only its own round
-        tag). The bucket id is the Spark bucketed-file suffix
-        (part-XXXXX-<uuid>_NNNNN.*). Records taken at commit time stay
-        valid as historical commit records even after compact_seen
-        rewrites the table."""
-        import re
-
+    def _bucketed_round_files(self, rnd: int) -> list[tuple[str, object]]:
+        """(path, parquet metadata) of every bucketed-seen file written
+        by round rnd's append, identified by footer statistics: every
+        row group has round min == max == rnd (each append writes only
+        its own round tag; a compacted file carries the latest
+        committed round, never an uncommitted one)."""
         import pyarrow.parquet as pq
 
         loc = self._seen_table_path()
@@ -600,23 +678,49 @@ class CrawlStore:
                     md.row_group(g).column(ci).statistics
                     for g in range(md.num_row_groups)
                 ]
-                if not stats or any(
-                    s is None or s.min != rnd or s.max != rnd for s in stats
+                if stats and all(
+                    s is not None and s.min == rnd and s.max == rnd
+                    for s in stats
                 ):
-                    continue
-                m = re.search(r"_(\d{5})\.", fn)
-                out.append(
-                    {
-                        "round": rnd,
-                        "dataset": "seen_delta",
-                        "partition": (
-                            f"bucket={int(m.group(1))}" if m else ""
-                        ),
-                        "file": fn,
-                        "rows": md.num_rows,
-                        "bytes": os.path.getsize(fp),
-                    }
-                )
+                    out.append((fp, md))
+        return out
+
+    def _drop_bucketed_round(self, rnd: int) -> None:
+        """Delete an uncommitted round's bucketed-seen append (the
+        leftovers of a crashed attempt) and refresh the catalog's file
+        listing so later scans do not look for the deleted files."""
+        files = self._bucketed_round_files(rnd)
+        for fp, _md in files:
+            os.remove(fp)
+        if files and self.spark.catalog.tableExists(self._seen_table):
+            self.spark.catalog.refreshTable(self._seen_table)
+
+    def _bucketed_delta_lineage(self, rnd: int) -> list[dict]:
+        """Lineage for a bucketed-seen append: the round's delta rows
+        live inside the shared bucketed table, so the round's files are
+        identified by their footer statistics (_bucketed_round_files).
+        The bucket id is the Spark bucketed-file suffix
+        (part-XXXXX-<uuid>_NNNNN.*). Records taken at commit time stay
+        valid as historical commit records even after compact_seen
+        rewrites the table."""
+        import re
+
+        out = []
+        for fp, md in self._bucketed_round_files(rnd):
+            fn = os.path.basename(fp)
+            m = re.search(r"_(\d{5})\.", fn)
+            out.append(
+                {
+                    "round": rnd,
+                    "dataset": "seen_delta",
+                    "partition": (
+                        f"bucket={int(m.group(1))}" if m else ""
+                    ),
+                    "file": fn,
+                    "rows": md.num_rows,
+                    "bytes": os.path.getsize(fp),
+                }
+            )
         return out
 
     def load_lineage(self, rounds: list[int] | None = None) -> list[dict]:

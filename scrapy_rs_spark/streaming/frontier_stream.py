@@ -34,8 +34,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scrapy_rs_spark.functions.text import extract_links_udf, extract_text_udf
-from scrapy_rs_spark.functions.url import urljoin_udf, url_hash_expr
+from scrapy_rs_spark.functions.text import parse_resolve_udf
+from scrapy_rs_spark.functions.url import url_hash_expr
 from scrapy_rs_spark.operators.dedup import anti_join_seen, dedup_in_batch
 from scrapy_rs_spark.operators.fetch import fetch_join, is_success
 from scrapy_rs_spark.operators.scheduler import apply_enqueue_filters
@@ -173,10 +173,20 @@ class StreamingCrawl:
             success = success.repartition(
                 self.spark.sparkContext.defaultParallelism
             )
-        items = success.select(
+        # one Python pass per page (text + resolved links), materialized
+        # by the items write and re-read by the link expansion
+        parsed = success.select(
+            "url",
+            "depth",
+            "cookies",
+            parse_resolve_udf(
+                F.col("html"), F.col("encoding"), F.col("url_canon")
+            ).alias("p"),
+        ).localCheckpoint(eager=False)
+        items = parsed.select(
             "url",
             F.lit("extracted_text").alias("item_type"),
-            extract_text_udf(F.col("html")).alias("text"),
+            F.col("p.text").alias("text"),
             F.lit(None).cast("map<string,string>").alias("fields"),
             F.lit(bid).alias("rnd"),
         )
@@ -184,24 +194,14 @@ class StreamingCrawl:
             os.path.join(self.items_dir, f"batch_id={bid}")
         )
 
-        links = (
-            success.select(
-                F.col("url_canon").alias("base"),
-                F.col("depth").alias("parent_depth"),
-                F.col("cookies").alias("parent_cookies"),
-                F.explode(extract_links_udf(F.col("html"))).alias("href"),
-            )
-            .withColumn("url", urljoin_udf(F.col("base"), F.col("href")))
-            .filter(F.col("url").isNotNull())
-        )
         candidates = (
-            links.select(
-                "url",
-                F.col("url").alias("url_canon"),
-                (F.col("parent_depth") + 1).cast("int").alias("depth"),
+            parsed.select(
+                F.explode(F.col("p.links")).alias("url"),
+                (F.col("depth") + 1).cast("int").alias("depth"),
                 # follow copies the cookie jar (response.rs:186-203)
-                F.col("parent_cookies").alias("cookies"),
+                "cookies",
             )
+            .withColumn("url_canon", F.col("url"))
             .withColumn("host", F.expr("parse_url(url_canon, 'HOST')"))
             .withColumn(
                 "url_hash", url_hash_expr(F.col("url_canon"), F.lit("GET"))

@@ -60,6 +60,13 @@ JOIN_CORPUS = [
     # fast path must NOT fire (round-3 advice regression)
     ("http://h.test/a//b/", "c", "http://h.test/a/b/c"),
     ("http://h.test//x/", "y?q=1", "http://h.test/x/y?q=1"),
+    # absolute hrefs already canonical resolve to themselves (fast
+    # path); anything the guard rejects takes the exact path
+    ("http://h.test/a/b", "http://o.test/x?y=1", "http://o.test/x?y=1"),
+    ("https://h.test/a", "http://o.test/p/q", "http://o.test/p/q"),
+    ("http://h.test/a", "http://o.test/a/../b", "http://o.test/b"),
+    ("http://h.test/a", "http://O.test:80/x", "http://o.test/x"),
+    ("http://h.test/a", "http://o.test/a?", "http://o.test/a"),
 ]
 
 

@@ -6,16 +6,21 @@ Pure-python properties (no Spark session needed — fast)."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import pandas as pd
+
 from scrapy_rs_spark.functions.url import (
+    _ABS_HREF,
     _ANY_DOT_SEG,
     _AFTER_LAST_SLASH,
     _BARE_QUERY_HREF,
     _CANON_REL_BASE,
     _FAST_HREF,
     _DOT_SEG,
+    _ORIGIN,
     _REL_HREF,
     canonicalize,
     resolve,
+    resolve_series,
 )
 
 
@@ -155,3 +160,42 @@ def test_canonicalize_never_raises(garbage):
 def test_resolve_never_raises(host, path, href):
     out = resolve(f"https://{host}/{path}", href)
     assert out is None or out.split("://")[0] in ("http", "https", "ftp", "ws", "wss")
+
+
+@given(_schemes, _hosts, _ports, _path_chars, _rel_bases)
+@settings(max_examples=400, deadline=None)
+def test_urljoin_absolute_fast_path_equals_exact(scheme, host, port, path, base):
+    """The absolute fast path (href unchanged) must agree with the
+    exact path whenever its guard admits the href — whatever the base."""
+    href = f"{scheme}://{host}{port}/{path}"
+    tail = _ORIGIN.sub("", _href_path_part(href))
+    is_abs_fast = (
+        _ABS_HREF.match(href) is not None
+        and _DOT_SEG.search(tail) is None
+        and "//" not in tail
+    )
+    if is_abs_fast:
+        assert resolve(base, href) == href, (base, href)
+
+
+_hrefs = st.one_of(
+    _path_chars,
+    st.builds(lambda p: "/" + p, _path_chars),
+    st.builds(lambda p: "?" + p, _path_chars),
+    st.builds(
+        lambda s, h, port, p: f"{s}://{h}{port}/{p}",
+        _schemes, _hosts, _ports, _path_chars,
+    ),
+)
+
+
+@given(st.lists(st.tuples(_rel_bases, _hrefs), min_size=1, max_size=12))
+@settings(max_examples=300, deadline=None)
+def test_resolve_series_equals_resolve(pairs):
+    """The vectorized resolver (every fast path plus the exact
+    fallback, as urljoin_udf and the fused parse UDF run it) is
+    row-for-row identical to resolve()."""
+    bases = pd.Series([b for b, _ in pairs], dtype="object")
+    hrefs = pd.Series([h for _, h in pairs], dtype="object")
+    got = resolve_series(bases, hrefs).tolist()
+    assert got == [resolve(b, h) for b, h in pairs]
