@@ -6,7 +6,7 @@ zeliu/scrapy-rs reference crawler (see /root/reference, SURVEY.md):
 * distributed URL frontier over bucketed tables (Iceberg in production,
   parquet-backed in this sandbox — see ``sources.store``),
 * URL canonicalization + 64-bit hashing feeding a partitioned seen-set
-  probed by left-anti join (with bloom pre-filter),
+  probed by left-anti join,
 * per-host politeness scheduling (robots.txt, crawl-delay, per-domain
   caps) expressed as salted per-host repartitioning + Window ranks,
 * fetch→parse→extract as vectorized pandas/Arrow UDF batches,

@@ -14,10 +14,6 @@ Set-at-a-time restatement:
     both sides bucketed by pmod(url_hash, B) so the join co-partitions
     (Iceberg storage-partitioned join in production — the 10^10-row
     seen set is scanned pruned and never re-shuffled)
-  * optional bloom pre-filter: a cheap might-contain pass that discards
-    the bulk of duplicate candidates before the exact anti-join; the
-    anti-join stays the source of truth, so false positives never drop
-    a URL (membership must match the reference exactly)
 """
 
 from __future__ import annotations
@@ -89,29 +85,14 @@ def anti_join_seen(
     candidates: DataFrame,
     seen: DataFrame,
     key: str = "url_hash",
-    bloom=None,
 ) -> DataFrame:
     """Drop candidates whose identity is already in the seen set.
-
-    With a BloomSidecar (sources/bloom.py), candidates that *definitely*
-    aren't seen skip the exact anti-join; *maybe-seen* rows still go
-    through it, so bloom false positives never drop a URL — membership
-    always matches the reference exactly.
 
     dont_filter rows bypass the check (reference declares the flag,
     /root/reference/core/src/request.rs:101-103; its schedulers never
     honored it — we do, documented deviation SURVEY.md §7.0)."""
     seen_keys = seen.select(F.col(key).alias(key))
-    if bloom is not None:
-        tagged = bloom.split_candidates(candidates, key)
-        maybe_seen = tagged.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-        definitely_new = tagged.filter(~F.col("__maybe_seen")).drop(
-            "__maybe_seen"
-        )
-        survived = maybe_seen.join(seen_keys, on=key, how="left_anti")
-        fresh = definitely_new.unionByName(survived)
-    else:
-        fresh = candidates.join(seen_keys, on=key, how="left_anti")
+    fresh = candidates.join(seen_keys, on=key, how="left_anti")
     if "dont_filter" in candidates.columns:
         bypass = candidates.filter(F.col("dont_filter"))
         fresh = fresh.filter(~F.col("dont_filter")).unionByName(bypass)

@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from scrapy_rs_spark.schemas import FRONTIER_COLS
+
 REDIRECT_STATUSES = [301, 302, 303, 307, 308]
 RETRYABLE_STATUSES = [408, 429, 500, 502, 503, 504]
 
@@ -364,27 +366,6 @@ def build_retries(
     """Failed fetches → next-round frontier rows with retry_count+1 and a
     backoff gate; exhausted retries are dropped (counted as errors by
     the caller). Columns reduced back to the frontier schema."""
-    frontier_cols = [
-        "url",
-        "url_canon",
-        "url_hash",
-        "host",
-        "method",
-        "priority",
-        "depth",
-        "discovery_round",
-        "discovery_seq",
-        "retry_count",
-        "dont_filter",
-        "retry_not_before_round",
-        "meta",
-        "body",
-        "cookies",
-        "timeout_ms",
-        "encoding",
-        "flags",
-        "proxy",
-    ]
     kept = retry_rows.filter(
         F.col("retry_count") < F.lit(settings.max_retries)
     )
@@ -395,5 +376,5 @@ def build_retries(
             + backoff_rounds(F.col("retry_count"), settings),
         )
         .withColumn("retry_count", F.col("retry_count") + 1)
-        .select(*frontier_cols)
+        .select(*FRONTIER_COLS)
     )

@@ -25,24 +25,18 @@ so Spark task retries and re-runs produce identical crawls.
 
 from __future__ import annotations
 
-import os
 import tempfile
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from scrapy_rs_spark.functions.text import (
-    extract_links_udf,
-    extract_text_udf,
-    parse_resolve_udf,
-)
-from scrapy_rs_spark.functions.url import urljoin_udf, url_hash_expr
 from scrapy_rs_spark.operators.dedup import anti_join_seen, dedup_in_batch
 from scrapy_rs_spark.operators.fetch import (
     build_retries,
-    fetch_join,
-    split_fetched,
+    is_redirect,
+    is_retryable,
+    is_success,
 )
 from scrapy_rs_spark.operators.scheduler import (
     apply_enqueue_filters,
@@ -51,31 +45,12 @@ from scrapy_rs_spark.operators.scheduler import (
     robots_filter,
     take_batch,
 )
+from scrapy_rs_spark.plans.round import expand_round, fetch_round
+from scrapy_rs_spark.schemas import FRONTIER_COLS
 from scrapy_rs_spark.settings import Settings
 from scrapy_rs_spark.sources.seeds import seeds_frontier
 from scrapy_rs_spark.sources.store import CrawlStore
 
-FRONTIER_COLS = [
-    "url",
-    "url_canon",
-    "url_hash",
-    "host",
-    "method",
-    "priority",
-    "depth",
-    "discovery_round",
-    "discovery_seq",
-    "retry_count",
-    "dont_filter",
-    "retry_not_before_round",
-    "meta",
-    "body",
-    "cookies",
-    "timeout_ms",
-    "encoding",
-    "flags",
-    "proxy",
-]
 
 # effectively-unlimited per-host budget when no politeness delay is set
 _UNLIMITED = 1 << 31
@@ -152,16 +127,11 @@ class CrawlEngine:
                 pages, self.settings.user_agent
             ).localCheckpoint(eager=True)
         self.robots = robots
-        # X1: user parse hooks (Arrow pandas UDFs); defaults = pinned
-        # extractors. X2-X4: ordered transform chains
+        # X1: user parse hooks (Arrow pandas UDFs); None = pinned
+        # extractors (plans/round.py). X2-X4: ordered transform chains
         # (operators/middleware.MiddlewareChain or any DataFrame→DataFrame)
-        self._default_parse = (
-            parse_text_udf is None
-            and parse_links_udf is None
-            and parse_fields_udf is None
-        )
-        self.parse_text_udf = parse_text_udf or extract_text_udf
-        self.parse_links_udf = parse_links_udf or extract_links_udf
+        self.parse_text_udf = parse_text_udf
+        self.parse_links_udf = parse_links_udf
         # DynamicItem parity (core/src/item.rs:28-36): arbitrary
         # spider-extracted fields ride in items.fields MAP<STRING,STRING>
         self.parse_fields_udf = parse_fields_udf
@@ -223,15 +193,6 @@ class CrawlEngine:
                     monitor_interval_ms=self.settings.monitor_interval_ms,
                 ),
                 spark_context=spark.sparkContext,
-            )
-        self.bloom = None
-        if self.settings.use_bloom_sidecar:
-            from scrapy_rs_spark.sources.bloom import BloomSidecar
-
-            self.bloom = BloomSidecar(
-                os.path.join(self.store.root, "bloom"),
-                n_buckets=self.settings.seen_buckets,
-                bits_per_bucket=self.settings.bloom_bits_per_bucket,
             )
 
     # ---- per-host budget for a round (politeness T1 + per-domain cap F6) ----
@@ -428,17 +389,7 @@ class CrawlEngine:
         pages_served_total: int,
         frontier_hint: int = 1 << 62,
     ) -> dict:
-        import time as _time
-
-        _prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-        _t0 = _time.time()
-        _marks = []
         _rdds_before = self._persisted_rdd_ids()
-
-        def _mark(label):
-            if _prof:
-                _marks.append((label, round(_time.time() - _t0, 2)))
-
         s = self.settings
         order = frontier_order(s.scheduler_type, s.crawl_strategy)
 
@@ -535,7 +486,6 @@ class CrawlEngine:
             # lazy: the counter agg below is the materializing action;
             # every later consumer reads the cached partitions
             batch = batch.localCheckpoint(eager=False)  # reused 5× below
-        _mark("rank+batch")
 
         if leftover is None:
             # rows that were politeness-deferred or over page_limit stay
@@ -557,51 +507,26 @@ class CrawlEngine:
                 ).drop("__served", "__host_delay")
 
         # ---- fetch (J2) + route ----
-        # strict mode (T1 fidelity, slot.rs:127-137): pace ONLY the frame
-        # feeding the fetch join — the fetched checkpoint below
-        # materializes it exactly once, so the sleeps run once per round
-        # and every other consumer of `batch` (leftover anti-join,
-        # counters) reads the unpaced rows. Row membership is identical.
-        fetch_src = batch
-        if s.strict_delay and (
-            max(s.domain_delay_ms, s.download_delay_ms) > 0
-            or self._has_host_delays
-        ):
-            from scrapy_rs_spark.operators.fetch import strict_spacing
-
-            fetch_src = strict_spacing(
-                batch,
-                default_delay_ms=max(s.domain_delay_ms, s.download_delay_ms),
-                host_delays=self.robots if self._has_host_delays else None,
-            )
         # broadcast-batch fetch when the committed frontier size (an
         # upper bound on this batch) fits the broadcast gate: the pages
         # side — whose html payload dominates — is then scanned in
         # place instead of sort-merge-shuffled every round. Strict
         # pacing keeps the join shape that streams the paced rows.
-        fetched = fetch_join(
-            fetch_src,
+        broadcast = (
+            frontier_hint <= s.fetch_broadcast_max_batch
+            and not s.strict_delay
+        )
+        fetched = fetch_round(
+            batch,
             self.pages,
-            default_timeout_ms=s.request_timeout_ms,
-            broadcast_batch=(
-                frontier_hint <= s.fetch_broadcast_max_batch
-                and not s.strict_delay
-            ),
+            s,
+            broadcast_batch=broadcast,
+            host_delays=self.robots if self._has_host_delays else None,
+            response_middlewares=self.response_middlewares,
         )
-        if self.response_middlewares is not None:
-            fetched = self.response_middlewares(fetched)  # X3
-        # lazy: the counter agg right below materializes the fetch join
-        # and computes all five route counters in ONE job
-        fetched = fetched.localCheckpoint(eager=False)
-        routes = split_fetched(fetched)
         # ONE aggregation for all route counters (5 counts = 1 job, not 5
-        # — per-round driver actions are the fixed cost of a round)
-        from scrapy_rs_spark.operators.fetch import (
-            is_redirect,
-            is_retryable,
-            is_success,
-        )
-
+        # — per-round driver actions are the fixed cost of a round); it
+        # also materializes the fetched checkpoint
         st = F.col("status")
         crow = fetched.agg(
             F.count("*").alias("n"),
@@ -619,241 +544,43 @@ class CrawlEngine:
         n_redirect = crow["red"] or 0
         n_retry_in = crow["rty"] or 0
         n_error = crow["err"] or 0
-        _mark("fetch+route")
 
-        # ---- parse (X1): items + links, one pandas-UDF pass ----
-        # AQE coalesces a sort-merge fetch-join's output by SIZE (html
-        # bytes), which can serialize the Python parse stage onto 1-2
-        # tasks; the parse cost is per-row CPU, so spread it across all
-        # cores explicitly — but ONLY when the join actually collapsed
-        # the partitioning: the broadcast-batch join preserves the
-        # pages scan's partitioning, and repartitioning there would
-        # shuffle every html byte once for nothing (guide §2.4)
-        success = routes["success"]
-        try:
-            fetched_parts = fetched.rdd.getNumPartitions()
-        except Exception:
-            fetched_parts = 0
-        if fetched_parts < self.spark.sparkContext.defaultParallelism:
-            success = success.repartition(
-                self.spark.sparkContext.defaultParallelism
-            )
-        # optional transport metadata (response.rs:35-45) projected by
-        # fetch_join when the pages table carries it — surfaced to item
-        # pipelines through the items.fields map (response middlewares
-        # already see the raw columns on the fetched frame)
-        transport = [
-            c
-            for c in ("certificate", "ip_address", "protocol")
-            if c in fetched.columns
-        ]
-        if transport:
-            transport_fields = F.map_filter(
-                F.map_from_arrays(
-                    F.array(*[F.lit(c) for c in transport]),
-                    F.array(*[F.col(c).cast("string") for c in transport]),
-                ),
-                lambda _, v: v.isNotNull(),
-            )
-        else:
-            transport_fields = F.lit(None).cast("map<string,string>")
-        if self._default_parse:
-            # single-pass parse: text + RESOLVED links in ONE UDF over
-            # each page, materialized once (html dropped immediately
-            # after) — the items write and the link expansion both read
-            # the result. Link resolution is fused into the parse UDF on
-            # purpose: a separate urljoin_udf over the exploded links is
-            # extracted by Catalyst twice (once for the `url IS NOT NULL`
-            # filter, once for the projection), so every link would
-            # cross into Python two more times per round.
-            parsed = success.select(
-                "url",
-                "depth",
-                "cookies",
-                transport_fields.alias("__tf"),
-                # per-request decode override (request.rs:74-90):
-                # encoding NULL → strict UTF-8, like the reference
-                parse_resolve_udf(
-                    F.col("html"), F.col("encoding"), F.col("url_canon")
-                ).alias("p"),
-                # lazy: the items write materializes the parse; the link
-                # expansion then reads the cached result
-            ).localCheckpoint(eager=False)
-            items = parsed.select(
-                F.col("url"),
-                F.lit("extracted_text").alias("item_type"),
-                F.col("p.text").alias("text"),
-                F.col("__tf").alias("fields"),
-                F.lit(rnd).alias("rnd"),
-            )
-            # links arrive canonical with unresolvable hrefs dropped
-            links = parsed.select(
-                F.col("depth").alias("parent_depth"),
-                F.col("cookies").alias("parent_cookies"),
-                F.explode(F.col("p.links")).alias("url"),
-            )
-        else:
-            # a custom parse_fields_udf owns the fields map; otherwise
-            # transport metadata (when present) rides there
-            fields_col = (
-                self.parse_fields_udf(F.col("html"))
-                if self.parse_fields_udf is not None
-                else transport_fields
-            )
-            items = success.select(
-                F.col("url"),
-                F.lit("extracted_text").alias("item_type"),
-                self.parse_text_udf(F.col("html")).alias("text"),
-                fields_col.alias("fields"),
-                F.lit(rnd).alias("rnd"),
-            )
-            links = (
-                success.select(
-                    F.col("url_canon").alias("base"),
-                    F.col("depth").alias("parent_depth"),
-                    F.col("cookies").alias("parent_cookies"),
-                    F.explode(self.parse_links_udf(F.col("html"))).alias(
-                        "href"
-                    ),
-                )
-                .withColumn("url", urljoin_udf(F.col("base"), F.col("href")))
-                .filter(F.col("url").isNotNull())
-            )
-        # invalid-UTF-8 / unparsable pages yield text NULL → routed to
-        # the error channel (functions/text.py contract), never written
-        # as items. Counts come free from observations on the items
-        # write (no extra driver jobs).
-        from pyspark.sql import Observation
-
-        obs_raw = Observation(f"items_raw_r{rnd}")
-        items = items.observe(
-            obs_raw,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("text").isNull().cast("long")).alias("n_null"),
-        ).filter(F.col("text").isNotNull())
+        # ---- parse (X1) → items + candidates ----
+        # the redirect chain (UDF + union) is skipped when the round saw
+        # no 3xx — or when follow_redirects is off, in which case 3xx
+        # rows are terminal responses (counted, never re-enqueued)
+        items, obs_raw, candidates = expand_round(
+            fetched,
+            rnd,
+            s,
+            broadcast_batch=broadcast,
+            follow_redirects=n_redirect > 0 and s.follow_redirects,
+            parse_text_udf=self.parse_text_udf,
+            parse_links_udf=self.parse_links_udf,
+            parse_fields_udf=self.parse_fields_udf,
+        )
         obs_out = None
         if self.item_pipelines is not None:
             items = self.item_pipelines(items)  # X4
             obs_out = Observation(f"items_out_r{rnd}")
             items = items.observe(obs_out, F.count(F.lit(1)).alias("n"))
-        # ONE Project node in FRONTIER_COLS order — a withColumn chain
-        # here adds ~16 nested Projects that Catalyst must analyze and
-        # collapse EVERY round; measured ~1.5 s/round of pure planning
-        # time on the politeness crawl (localCheckpoint plans the query
-        # even when lazy). unresolvable hrefs already filtered above;
-        # url is canonical post-urljoin; Response::follow copies the
-        # cookie jar onto followed requests (response.rs:186-203)
-        candidates = links.select(
-            F.col("url"),
-            F.col("url").alias("url_canon"),
-            url_hash_expr(F.col("url"), F.lit("GET")).alias("url_hash"),
-            F.expr("parse_url(url, 'HOST')").alias("host"),
-            F.lit("GET").alias("method"),
-            F.lit(0).alias("priority"),
-            (F.col("parent_depth") + 1).cast("int").alias("depth"),
-            F.lit(rnd + 1).alias("discovery_round"),
-            F.lit(0).cast("long").alias("discovery_seq"),
-            F.lit(0).alias("retry_count"),
-            F.lit(False).alias("dont_filter"),
-            F.lit(0).alias("retry_not_before_round"),
-            F.lit(None).cast("map<string,string>").alias("meta"),
-            F.lit(None).cast("binary").alias("body"),
-            F.col("parent_cookies").alias("cookies"),
-            F.lit(None).cast("bigint").alias("timeout_ms"),
-            F.lit(None).cast("string").alias("encoding"),
-            F.lit(None).cast("array<string>").alias("flags"),
-            F.lit(None).cast("string").alias("proxy"),
-        )
 
-        # redirects re-enter at the same depth AND priority
-        # (response.rs:126-142), cookies copied like Response::follow;
-        # hop count rides in meta, bounded by max_redirects. The whole
-        # chain (UDF + union) is skipped when the round saw none — or
-        # when follow_redirects is off, in which case 3xx rows are
-        # terminal responses (counted, never re-enqueued).
-        follow = n_redirect > 0 and s.follow_redirects
-        redirs = None if not follow else routes["redirect"].select(
-            urljoin_udf(
-                F.col("url_canon"), F.element_at(F.col("headers"), "location")
-            ).alias("url"),
-            F.col("depth"),
-            F.col("priority"),
-            F.col("cookies"),
-            # the reference downloader follows redirects within the SAME
-            # Request, so per-request timeout/encoding/flags persist
-            # across hops — carry them onto the re-enqueued row (a
-            # shift-jis page behind a 301 keeps its decode override)
-            F.col("timeout_ms"),
-            F.col("encoding"),
-            F.col("flags"),
-            (
-                F.coalesce(
-                    F.element_at(F.col("meta"), "redirect_hops").cast("int"),
-                    F.lit(0),
-                )
-                + 1
-            ).alias("hops"),
-        )
-        # single Project (see candidates note). hop count survives into
-        # the new row's meta or max_redirects could never bound a
-        # multi-hop chain; proxy NOT inherited across redirects (the
-        # reference never copies it onto the follow-up Request)
-        redirs = None if redirs is None else (
-            redirs.filter(
-                F.col("url").isNotNull()
-                & (F.col("hops") <= F.lit(s.max_redirects))
-            ).select(
-                F.col("url"),
-                F.col("url").alias("url_canon"),
-                url_hash_expr(F.col("url"), F.lit("GET")).alias("url_hash"),
-                F.expr("parse_url(url, 'HOST')").alias("host"),
-                F.lit("GET").alias("method"),
-                F.col("priority"),
-                F.col("depth"),
-                F.lit(rnd + 1).alias("discovery_round"),
-                F.lit(0).cast("long").alias("discovery_seq"),
-                F.lit(0).alias("retry_count"),
-                F.lit(False).alias("dont_filter"),
-                F.lit(0).alias("retry_not_before_round"),
-                F.map_from_arrays(
-                    F.array(F.lit("redirect_hops")),
-                    F.array(F.col("hops").cast("string")),
-                ).alias("meta"),
-                F.lit(None).cast("binary").alias("body"),
-                F.col("cookies"),
-                F.col("timeout_ms"),
-                F.col("encoding"),
-                F.col("flags"),
-                F.lit(None).cast("string").alias("proxy"),
-            )
-        )
-        _mark("cand-built")
-        candidates = candidates.select(*FRONTIER_COLS)
-        if redirs is not None:
-            candidates = candidates.unionByName(redirs.select(*FRONTIER_COLS))
-
-        # ---- enqueue: filters → in-batch dedup → seen anti-join (F1-F4, J1) ----
-        candidates = apply_enqueue_filters(candidates, s)
-        candidates = dedup_in_batch(candidates)
-        _mark("enq-built")
-        seen = self._load_seen()
-        _mark("seen-load")
-        candidates = anti_join_seen(
-            candidates, seen, bloom=self.bloom
-        ).select(*FRONTIER_COLS)
-        _mark("antijoin-built")
+        # ---- seen anti-join (J1) ----
         # one materialization — candidates feed the count, the seen delta,
         # and the frontier commit; without this the parse-UDF chain would
-        # recompute 3-4× per round. Lazy: the new-URL count below is the
-        # materializing action (count+cache = one job)
-        candidates = candidates.localCheckpoint(eager=False)
-        _mark("parse+enqueue")
+        # recompute 3-4× per round. Lazy: the frontier write below is the
+        # materializing action
+        candidates = (
+            anti_join_seen(candidates, self._load_seen())
+            .select(*FRONTIER_COLS)
+            .localCheckpoint(eager=False)
+        )
 
         # ---- retries (J5/X5): skipped entirely on clean rounds ----
         retries = (
             None
             if n_retry_in == 0
-            else build_retries(routes["retry"], rnd, s).select(*FRONTIER_COLS)
+            else build_retries(fetched.filter(is_retryable(st)), rnd, s)
         )
 
         next_frontier = (
@@ -891,9 +618,7 @@ class CrawlEngine:
         # DAGScheduler accumulator-update failures, slower sustained
         # crawls, and one outright write failure at the 4M design point.
         self.store.begin_round(rnd)
-        _mark("pre-items")
         self.store.write_items(rnd, items)
-        _mark("items-write")
         raw = obs_raw.get
         n_parsed = int(raw["n"] or 0)
         n_null_text = int(raw["n_null"] or 0)
@@ -936,7 +661,6 @@ class CrawlEngine:
         fr_vals = obs_fr.get
         n_new = int(fr_vals["n_new"] or 0)
         n_retries_requeued = 0 if retries is None else retries.count()
-        _mark("counts")
         n_exhausted = n_retry_in - n_retries_requeued
         metrics["retries"] = n_retries_requeued
         # decode failures (text NULL) are errors, not items — the page
@@ -957,25 +681,7 @@ class CrawlEngine:
             metrics,
             clean=False,
         )
-        if self.bloom is not None and metrics["new_urls"]:
-            # sidecar built AFTER the exact commit: a crash can leave the
-            # bloom lagging (extra anti-join probes) but never ahead
-            # (which could wrongly mark URLs maybe-seen before they are)
-            self.bloom.update_from(
-                candidates.select(
-                    "url_hash",
-                    F.pmod(
-                        F.col("url_hash"), F.lit(self.settings.seen_buckets)
-                    )
-                    .cast("int")
-                    .alias("bucket"),
-                )
-            )
         self._release_round_rdds(_rdds_before)
-        _mark("commit")
-        if _prof:
-            print(f"[round {rnd}] n={n_batch} " + " ".join(
-                f"{k}={v}s" for k, v in _marks))
         return metrics
 
     # ---- public API (X7 parity: Engine::run → stats) ----
@@ -1006,8 +712,6 @@ class CrawlEngine:
         # (the same trick the round loop uses): one execution of the
         # seeds plan — canonicalize UDF included — instead of two
         # standalone counts plus a write
-        from pyspark.sql import Observation
-
         obs_valid = Observation("seed_validity")
         seeds_df = seeds_df.observe(
             obs_valid,
@@ -1037,7 +741,7 @@ class CrawlEngine:
             None,
             None,
             {
-                "round": 0,  # seeds are marked seen at enqueue (bloom below)
+                "round": 0,  # seeds are marked seen at enqueue
                 "requests": 0,
                 "responses": 0,
                 "items": 0,
@@ -1049,17 +753,6 @@ class CrawlEngine:
             },
             clean=False,
         )
-        if self.bloom is not None:
-            self.bloom.update_from(
-                frontier0_disk.select(
-                    "url_hash",
-                    F.pmod(
-                        F.col("url_hash"), F.lit(s.seen_buckets)
-                    )
-                    .cast("int")
-                    .alias("bucket"),
-                )
-            )
         stats = self.resume(max_rounds=max_rounds)
         # run()'s duration includes the seeding commit above
         stats.duration_s = _time.monotonic() - _t_run

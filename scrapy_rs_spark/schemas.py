@@ -49,12 +49,12 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-FRONTIER_DDL = (
-    "url STRING, url_canon STRING, url_hash BIGINT, host STRING, method STRING,"
-    " priority INT, depth INT, discovery_round INT, discovery_seq BIGINT,"
-    " retry_count INT, dont_filter BOOLEAN, retry_not_before_round INT,"
-    " meta MAP<STRING,STRING>, body BINARY, cookies MAP<STRING,STRING>,"
-    " timeout_ms BIGINT, encoding STRING, flags ARRAY<STRING>, proxy STRING"
+FRONTIER_COLS = FRONTIER_SCHEMA.fieldNames()
+
+# DDL form for readers and empty frames (every column nullable, as file
+# sources read them)
+FRONTIER_DDL = ", ".join(
+    f"{f.name} {f.dataType.simpleString()}" for f in FRONTIER_SCHEMA.fields
 )
 
 # pages row ⇔ Response (/root/reference/core/src/response.rs:11-46) shaped to

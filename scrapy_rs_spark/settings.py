@@ -70,12 +70,6 @@ class Settings:
     # (rows × ~250 B must fit comfortably under the 8 GB broadcast
     # cap); the default keeps broadcasts ≤ ~125 MB.
     fetch_broadcast_max_batch: int = 500_000
-    # per-bucket bloom pre-filter (north rule). NOTE: the sidecar writes
-    # per-bucket .npy files under <store>/bloom — on a real cluster the
-    # store path MUST be shared storage (HDFS/S3/NFS) visible to every
-    # executor, same as the store itself
-    use_bloom_sidecar: bool = False
-    bloom_bits_per_bucket: int = 1 << 20
     # close-lifecycle bound (engine/src/lib.rs:1285-1420: the reference
     # wraps each spider/pipeline/middleware close hook in a 5 s timeout
     # so a hanging hook cannot hang crawl exit)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from scrapy_rs_spark.functions.url import with_url_identity
+from scrapy_rs_spark.schemas import FRONTIER_COLS
 
 
 def seeds_frontier(
@@ -109,25 +110,5 @@ def seeds_frontier(
         .withColumn(
             "meta", F.lit(None).cast("map<string,string>")
         )
-        .select(
-            "url",
-            "url_canon",
-            "url_hash",
-            "host",
-            "method",
-            "priority",
-            "depth",
-            "discovery_round",
-            "discovery_seq",
-            "retry_count",
-            "dont_filter",
-            "retry_not_before_round",
-            "meta",
-            "body",
-            "cookies",
-            "timeout_ms",
-            "encoding",
-            "flags",
-            "proxy",
-        )
+        .select(*FRONTIER_COLS)
     )

@@ -6,21 +6,28 @@ The batch-iterative CrawlEngine is the faithful set-oriented model
 (SURVEY.md §7.0); this module is the Structured Streaming restatement
 for deployments that want a *standing* crawler:
 
-  frontier dir ──readStream──► foreachBatch(round operators) ──┐
-        ▲                                                      │
-        └──────────── new candidates appended ─────────────────┘
+  frontier dir ──readStream──► foreachBatch(round kernel) ──┐
+        ▲                                                   │
+        └─────────── new candidates appended ───────────────┘
 
-Each micro-batch runs the SAME operators as a CrawlEngine round
-(fetch-as-join, parse UDFs, enqueue filters, in-batch dedup, seen
-anti-join) and appends discovered candidates back into the watched
-frontier directory — the stream feeds itself until the frontier
-drains. The seen set lives in batch_id=N-partitioned parquet. Streaming
-execution is at-least-once (a crashed micro-batch replays), so every
-sink write is idempotent: items/seen overwrite their batch_id=N
-partition, the frontier feed materializes under deterministic
-per-batch file names (the file source tracks processed files by path),
-and the seen anti-join excludes the current batch's own partition so a
-replay reproduces — not re-appends — its first attempt.
+Each micro-batch is one crawl round run through the engine's own round
+kernel (plans/round.py: fetch, parse, redirect following, enqueue
+filters, in-batch dedup), so a micro-batch and a CrawlEngine round
+build the same plan. Only two things differ from the engine:
+
+* the seen source: batch_id=N-partitioned parquet instead of the
+  CrawlStore's committed seen set;
+* the feed: discovered candidates are appended back into the watched
+  frontier directory, so the stream feeds itself until the frontier
+  drains, instead of a committed next-round frontier.
+
+Streaming execution is at-least-once (a crashed micro-batch replays),
+so every sink write is idempotent: items/seen overwrite their
+batch_id=N partition, the frontier feed materializes under
+deterministic per-batch file names (the file source tracks processed
+files by path), and the seen anti-join excludes the current batch's
+own partition so a replay reproduces — not re-appends — its first
+attempt.
 
 Politeness in streaming mode: micro-batch duration is the round
 duration, so per-host budgets discretize the same way (T1).
@@ -34,21 +41,12 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scrapy_rs_spark.functions.text import parse_resolve_udf
-from scrapy_rs_spark.functions.url import url_hash_expr
 from scrapy_rs_spark.operators.dedup import anti_join_seen, dedup_in_batch
-from scrapy_rs_spark.operators.fetch import fetch_join, is_success
 from scrapy_rs_spark.operators.scheduler import apply_enqueue_filters
-from scrapy_rs_spark.schemas import FRONTIER_DDL
+from scrapy_rs_spark.plans.round import expand_round, fetch_round
+from scrapy_rs_spark.schemas import FRONTIER_COLS, FRONTIER_DDL
 from scrapy_rs_spark.settings import Settings
 from scrapy_rs_spark.sources.seeds import seeds_frontier
-
-FRONTIER_COLS = [
-    "url", "url_canon", "url_hash", "host", "method", "priority", "depth",
-    "discovery_round", "discovery_seq", "retry_count", "dont_filter",
-    "retry_not_before_round", "meta", "body", "cookies",
-    "timeout_ms", "encoding", "flags", "proxy",
-]
 
 
 class StreamingCrawl:
@@ -143,85 +141,24 @@ class StreamingCrawl:
         if batch.isEmpty():
             return
         bid = int(batch_id)
-        # strict per-request spacing (T1 fidelity mode) applies to the
-        # streaming path too — same operator, same semantics as the
-        # batch engine (the standing crawl has no robots table, so only
-        # the global delay feeds the schedule); membership unchanged
-        fetch_src = batch
-        strict_delay_ms = max(s.domain_delay_ms, s.download_delay_ms)
-        if s.strict_delay and strict_delay_ms > 0:
-            from scrapy_rs_spark.operators.fetch import strict_spacing
-
-            fetch_src = strict_spacing(
-                fetch_src, default_delay_ms=strict_delay_ms
-            )
         # a micro-batch is one round's staged candidate file(s) —
         # bounded and small next to the pages table, so the broadcast
-        # form of the fetch join applies (html scanned in place, never
-        # shuffled), exactly as in the batch engine's gated path
-        fetched = fetch_join(
-            fetch_src, self.pages,
-            default_timeout_ms=s.request_timeout_ms,
-            broadcast_batch=not s.strict_delay,
-        ).localCheckpoint(eager=True)
-        success = fetched.filter(is_success(F.col("status")))
-        try:
-            fetched_parts = fetched.rdd.getNumPartitions()
-        except Exception:
-            fetched_parts = 0
-        if fetched_parts < self.spark.sparkContext.defaultParallelism:
-            success = success.repartition(
-                self.spark.sparkContext.defaultParallelism
-            )
-        # one Python pass per page (text + resolved links), materialized
-        # by the items write and re-read by the link expansion
-        parsed = success.select(
-            "url",
-            "depth",
-            "cookies",
-            parse_resolve_udf(
-                F.col("html"), F.col("encoding"), F.col("url_canon")
-            ).alias("p"),
-        ).localCheckpoint(eager=False)
-        items = parsed.select(
-            "url",
-            F.lit("extracted_text").alias("item_type"),
-            F.col("p.text").alias("text"),
-            F.lit(None).cast("map<string,string>").alias("fields"),
-            F.lit(bid).alias("rnd"),
+        # form of the fetch join applies, as in the engine's gated
+        # path; strict pacing keeps the join shape that streams the
+        # paced rows. The standing crawl has no robots table, so only
+        # the configured delay paces it.
+        broadcast = not s.strict_delay
+        fetched = fetch_round(batch, self.pages, s, broadcast_batch=broadcast)
+        items, _, candidates = expand_round(
+            fetched,
+            bid,
+            s,
+            broadcast_batch=broadcast,
+            follow_redirects=s.follow_redirects,
         )
         items.write.mode("overwrite").parquet(
             os.path.join(self.items_dir, f"batch_id={bid}")
         )
-
-        candidates = (
-            parsed.select(
-                F.explode(F.col("p.links")).alias("url"),
-                (F.col("depth") + 1).cast("int").alias("depth"),
-                # follow copies the cookie jar (response.rs:186-203)
-                "cookies",
-            )
-            .withColumn("url_canon", F.col("url"))
-            .withColumn("host", F.expr("parse_url(url_canon, 'HOST')"))
-            .withColumn(
-                "url_hash", url_hash_expr(F.col("url_canon"), F.lit("GET"))
-            )
-            .withColumn("method", F.lit("GET"))
-            .withColumn("priority", F.lit(0))
-            .withColumn("discovery_round", F.lit(int(batch_id) + 1))
-            .withColumn("discovery_seq", F.lit(0).cast("long"))
-            .withColumn("retry_count", F.lit(0))
-            .withColumn("dont_filter", F.lit(False))
-            .withColumn("retry_not_before_round", F.lit(0))
-            .withColumn("meta", F.lit(None).cast("map<string,string>"))
-            .withColumn("body", F.lit(None).cast("binary"))
-            .withColumn("timeout_ms", F.lit(None).cast("bigint"))
-            .withColumn("encoding", F.lit(None).cast("string"))
-            .withColumn("flags", F.lit(None).cast("array<string>"))
-            .withColumn("proxy", F.lit(None).cast("string"))
-        )
-        candidates = apply_enqueue_filters(candidates, s)
-        candidates = dedup_in_batch(candidates)
         # membership is judged against OTHER batches' seen partitions —
         # a replay must not see its own first attempt's hashes or the
         # anti-join would wrongly drain the batch to empty

@@ -49,35 +49,6 @@ def test_dont_filter_bypasses_seen(spark):
     assert [r.url for r in out] == ["a"]
 
 
-def test_bloom_sidecar_prefilter_is_exact(spark, tmp_path):
-    # bloom is a pre-filter only — results identical to plain anti-join,
-    # including against an EMPTY sidecar (no files yet)
-    import pyspark.sql.functions as F
-
-    from scrapy_rs_spark.sources.bloom import BloomSidecar
-
-    rows = [(f"u{i}", i * 2654435761, 0, 0, 0, i, False) for i in range(200)]
-    cand = _frontier(spark, rows)
-    seen_hashes = [i * 2654435761 for i in range(0, 200, 3)]
-    seen = spark.createDataFrame([(h,) for h in seen_hashes], "url_hash BIGINT")
-
-    side = BloomSidecar(str(tmp_path / "bloom"), n_buckets=8, bits_per_bucket=1 << 16)
-    # empty sidecar: everything is "definitely new"
-    assert anti_join_seen(cand, seen.limit(0), bloom=side).count() == 200
-    # build sidecar from seen, then probe
-    side.update_from(
-        seen.withColumn("bucket", F.pmod(F.col("url_hash"), F.lit(8)).cast("int"))
-    )
-    plain = {r.url_hash for r in anti_join_seen(cand, seen).collect()}
-    bloomed = {r.url_hash for r in anti_join_seen(cand, seen, bloom=side).collect()}
-    assert plain == bloomed
-    # no false negatives by construction: every seen hash is flagged maybe
-    tagged = side.split_candidates(
-        spark.createDataFrame([(h,) for h in seen_hashes], "url_hash BIGINT")
-    )
-    assert tagged.filter(~F.col("__maybe_seen")).count() == 0
-
-
 def test_dedup_clusters_connected_components(spark):
     """dedup_clusters: min-label propagation finds components — chain,
     triangle, and a 2-cluster graph; keeper = min id per component."""

@@ -1,13 +1,7 @@
-"""Hot-host skew handling (salted two-phase rank) and the engine's
-bloom-sidecar path — north-rule scale mechanisms, checked for
-exactness."""
-
-import pyspark.sql.functions as F
+"""Hot-host skew handling (salted two-phase rank) — a north-rule scale
+mechanism, checked for exactness."""
 
 from scrapy_rs_spark.operators.scheduler import frontier_order, per_host_topk
-from scrapy_rs_spark.plans.engine import CrawlEngine
-from scrapy_rs_spark.settings import Settings
-from scrapy_rs_spark.sources.mocksite import BASE_URL, mock_site_pages
 
 
 def test_salted_topk_equals_exact(spark):
@@ -38,38 +32,3 @@ def test_salted_topk_equals_exact(spark):
     }
     assert exact == salted
     assert len({h for h, _, _ in exact}) == 21  # hot + 20 cold
-
-
-def test_engine_bloom_sidecar_identical_crawl(spark, tmp_path):
-    """Same crawl with and without the bloom sidecar → identical items
-    and identical seen membership (bloom is pre-filter only)."""
-    pages = mock_site_pages(spark, 20, 5, partitions=4).localCheckpoint(True)
-    base = Settings(scheduler_type="breadth_first", max_depth=2)
-    plain = CrawlEngine(spark, pages, base, store_path=str(tmp_path / "p"))
-    sp = plain.run([f"{BASE_URL}/0"])
-    bloomy = CrawlEngine(
-        spark,
-        pages,
-        Settings(
-            scheduler_type="breadth_first",
-            max_depth=2,
-            use_bloom_sidecar=True,
-            bloom_bits_per_bucket=1 << 16,
-        ),
-        store_path=str(tmp_path / "b"),
-    )
-    sb = bloomy.run([f"{BASE_URL}/0"])
-    assert (sp.requests, sp.items, sp.errors) == (sb.requests, sb.items, sb.errors)
-    a = {r.url for r in plain.items().select("url").collect()}
-    b = {r.url for r in bloomy.items().select("url").collect()}
-    assert a == b
-    sa = {r.url_hash for r in plain.seen().collect()}
-    sb_ = {r.url_hash for r in bloomy.seen().collect()}
-    assert sa == sb_
-    # the sidecar actually exists and was populated
-    import os
-
-    assert os.path.isdir(str(tmp_path / "b" / "bloom"))
-    assert any(
-        f.endswith(".npy") for f in os.listdir(str(tmp_path / "b" / "bloom"))
-    )
