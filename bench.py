@@ -218,14 +218,11 @@ def _seen_probe(
     delta_rows: int = 50_000,
     cand_rows: int = 100_000,
 ) -> dict:
-    """Shuffle-free seen-probe evidence (round-4 verdict ask #1): the
-    per-round anti-join against a 2M+-row seen set, bucketed-table
-    layout vs plain parquet deltas. The structural claim is the
-    Exchange count (bucketed: 1 — candidates only; plain: 2 — the seen
-    side re-shuffles every round, which is the cost that scales with
-    the 10^10-row seen set, not with the batch). Broadcast is disabled
-    for the probe — at design scale the seen side could never
-    broadcast."""
+    """Seen-probe timing: the per-round anti-join of a candidate batch
+    against a 2M+-row seen set held as plain per-round parquet deltas,
+    before and after compaction. Broadcast is disabled for the probe —
+    at design scale the seen side could never broadcast, so the plan
+    shuffles both sides (2 Exchanges)."""
     from pyspark.sql import functions as F
 
     from scrapy_rs_spark.operators.dedup import anti_join_seen
@@ -238,64 +235,54 @@ def _seen_probe(
         "seen_rows": base_rows + delta_rounds * delta_rows,
         "candidate_rows": cand_rows,
     }
+    root = tempfile.mkdtemp(prefix="bench_probe_plain_")
     try:
-        for mode, label in ((True, "bucketed"), (False, "plain")):
-            root = tempfile.mkdtemp(prefix=f"bench_probe_{label}_")
-            try:
-                st = CrawlStore(
-                    spark, root, seen_buckets=32, bucketed_seen=mode
-                )
-                tiny = spark.range(1).select(
-                    F.lit("http://x.test/").alias("url")
-                )
-                base = spark.range(base_rows).select(
-                    F.xxhash64("id").alias("url_hash")
-                )
-                st.commit_round(0, tiny, base, None, None, {"round": 0})
-                for r in range(1, delta_rounds + 1):
-                    lo = base_rows + (r - 1) * delta_rows
-                    delta = spark.range(lo, lo + delta_rows).select(
-                        F.xxhash64("id").alias("url_hash")
-                    )
-                    st.commit_round(r, tiny, delta, None, None, {"round": r})
-                # disjoint id range: candidates must be genuinely fresh
-                # (an all-seen batch short-circuits the join's output)
-                cand_lo = 10**12
-                cands = spark.range(cand_lo, cand_lo + cand_rows).select(
-                    F.xxhash64("id").alias("url_hash")
-                )
-                # plan inspection: final adaptive plan of the join itself
-                q = anti_join_seen(cands, st.load_seen())
-                rows = q.collect()
-                plan = q._jdf.queryExecution().executedPlan().toString()
-                final = plan.split("== Initial Plan ==")[0]
-                times = []
-                for _ in range(3):
-                    t0 = time.time()
-                    anti_join_seen(cands, st.load_seen()).count()
-                    times.append(round(time.time() - t0, 3))
-                # steady-state: the compaction cadence keeps both
-                # layouts folded (plain: deltas → 1 dir; bucketed:
-                # 1 file/bucket, which restores the sorted-scan
-                # metadata and elides the seen-side SMJ Sort)
-                st.compact_seen()
-                ctimes = []
-                for _ in range(3):
-                    t0 = time.time()
-                    anti_join_seen(cands, st.load_seen()).count()
-                    ctimes.append(round(time.time() - t0, 3))
-                out[label] = {
-                    "exchanges": final.count("Exchange"),
-                    "bucketed_scan": "Bucketed: true" in final,
-                    "fresh_rows": len(rows),
-                    "probe_seconds": times,
-                    "probe_s_min": min(times),
-                    "compacted_probe_seconds": ctimes,
-                    "compacted_probe_s_min": min(ctimes),
-                }
-            finally:
-                shutil.rmtree(root, ignore_errors=True)
+        st = CrawlStore(spark, root, seen_buckets=32)
+        tiny = spark.range(1).select(F.lit("http://x.test/").alias("url"))
+        base = spark.range(base_rows).select(
+            F.xxhash64("id").alias("url_hash")
+        )
+        st.commit_round(0, tiny, base, None, None, {"round": 0})
+        for r in range(1, delta_rounds + 1):
+            lo = base_rows + (r - 1) * delta_rows
+            delta = spark.range(lo, lo + delta_rows).select(
+                F.xxhash64("id").alias("url_hash")
+            )
+            st.commit_round(r, tiny, delta, None, None, {"round": r})
+        # disjoint id range: candidates must be genuinely fresh
+        # (an all-seen batch short-circuits the join's output)
+        cand_lo = 10**12
+        cands = spark.range(cand_lo, cand_lo + cand_rows).select(
+            F.xxhash64("id").alias("url_hash")
+        )
+        # plan inspection: final adaptive plan of the join itself
+        q = anti_join_seen(cands, st.load_seen())
+        rows = q.collect()
+        plan = q._jdf.queryExecution().executedPlan().toString()
+        final = plan.split("== Initial Plan ==")[0]
+        times = []
+        for _ in range(3):
+            t0 = time.time()
+            anti_join_seen(cands, st.load_seen()).count()
+            times.append(round(time.time() - t0, 3))
+        # steady-state: the compaction cadence folds the deltas
+        st.compact_seen()
+        ctimes = []
+        for _ in range(3):
+            t0 = time.time()
+            anti_join_seen(cands, st.load_seen()).count()
+            ctimes.append(round(time.time() - t0, 3))
+        out["plain"] = {
+            "exchanges": final.count("Exchange"),
+            "bucketed_scan": "Bucketed: true" in final,
+            "fresh_rows": len(rows),
+            "probe_seconds": times,
+            "probe_s_min": min(times),
+            "compacted_probe_seconds": ctimes,
+            "compacted_probe_s_min": min(ctimes),
+        }
     finally:
+        shutil.rmtree(root, ignore_errors=True)
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
     return out

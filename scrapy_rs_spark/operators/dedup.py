@@ -10,10 +10,13 @@ Set-at-a-time restatement:
     row_number over (priority DESC, depth ASC, discovery_round,
     discovery_seq, url) == 1 (north-rule total order; the reference's
     in-heap tie order is unspecified)
-  * cross-batch dedup: LEFT ANTI hash join against the seen table,
-    both sides bucketed by pmod(url_hash, B) so the join co-partitions
-    (Iceberg storage-partitioned join in production — the 10^10-row
-    seen set is scanned pruned and never re-shuffled)
+  * cross-batch dedup: LEFT ANTI hash join against the seen set on
+    url_hash alone (the store's pmod(url_hash, B) bucket column is an
+    on-disk layout, not a join key). In production the seen set is an
+    Iceberg table with a bucket(url_hash) transform, where a
+    storage-partitioned join keeps the 10^10-row seen side from being
+    re-shuffled; here the planner picks a broadcast or a shuffled
+    anti-join
 """
 
 from __future__ import annotations

@@ -148,7 +148,6 @@ class CrawlEngine:
             spark,
             store_path or tempfile.mkdtemp(prefix="crawlstore_"),
             seen_buckets=self.settings.seen_buckets,
-            bucketed_seen=self.settings.bucketed_seen,
         )
         # cooperative pause/stop gates, checked at round boundaries —
         # the set-model restatement of the reference's Notify gates
@@ -239,12 +238,6 @@ class CrawlEngine:
         __init__). Semantically identical to store.load_seen(); costs
         one directory listing for the newest delta instead of one per
         committed delta per round."""
-        if self.store.bucketed_seen:
-            # the bucketed table is ONE catalog-backed scan — no
-            # per-round delta dirs to union, so the incremental cache
-            # has nothing to save; the scan's bucketed partitioning is
-            # what makes the anti-join exchange-free on this side
-            return self.store.load_seen()
         valid = self.store.seen_delta_rounds()
         gen = self.store.seen_generation()
         if (
@@ -295,20 +288,12 @@ class CrawlEngine:
           3× faster than the host requested.
         The per-domain lifetime cap further bounds it."""
         s = self.settings
-        delay = max(s.domain_delay_ms, s.download_delay_ms)
-        eff_delay = F.greatest(
-            F.coalesce(F.col("__host_delay"), F.lit(0)).cast("bigint"),
-            F.lit(delay).cast("bigint"),
-        )
-        round_ms = F.lit(s.round_duration_ms).cast("bigint")
+        eff_delay, round_ms, period, phase = self._delay_schedule_cols("int")
         short_budget = F.when(eff_delay <= 0, F.lit(_UNLIMITED)).otherwise(
             F.greatest(F.lit(1), (round_ms / eff_delay).cast("int"))
         )
         if self._has_long_delays:
-            period = F.ceil(eff_delay / round_ms).cast("int")
-            on_phase = F.pmod(F.lit(rnd), period) == F.pmod(
-                F.xxhash64(F.col("host")), period
-            )
+            on_phase = F.pmod(F.lit(rnd), period) == phase
             # eff_delay ≤ 0 falls into the ≤ round_ms branch → UNLIMITED
             budget = F.when(eff_delay <= round_ms, short_budget).otherwise(
                 F.when(on_phase, F.lit(1)).otherwise(F.lit(0))
@@ -321,6 +306,27 @@ class CrawlEngine:
         if s.max_requests_per_domain is not None:
             budget = F.least(budget, self._cap_left_col())
         return budget
+
+    def _delay_schedule_cols(self, period_type: str):
+        """(eff_delay, round_ms, period, phase) columns of the per-host
+        delay schedule, over rows carrying __host_delay and host (see
+        _with_budget_inputs). eff_delay is the larger of the host's
+        robots Crawl-delay and the global delay; a host whose eff_delay
+        exceeds the round serves once every period =
+        ceil(eff_delay / round_ms) rounds, on the rounds congruent to
+        phase = xxhash64(host) mod period. period is cast to
+        period_type: "int" in the round budget, "bigint" in resume's
+        fast-forward."""
+        s = self.settings
+        delay = max(s.domain_delay_ms, s.download_delay_ms)
+        eff_delay = F.greatest(
+            F.coalesce(F.col("__host_delay"), F.lit(0)).cast("bigint"),
+            F.lit(delay).cast("bigint"),
+        )
+        round_ms = F.lit(s.round_duration_ms).cast("bigint")
+        period = F.ceil(eff_delay / round_ms).cast(period_type)
+        phase = F.pmod(F.xxhash64(F.col("host")), period)
+        return eff_delay, round_ms, period, phase
 
     def _with_budget_inputs(
         self, df: DataFrame, served: DataFrame | None
@@ -975,18 +981,10 @@ class CrawlEngine:
                     # phase-gates; _with_budget_inputs leaves
                     # __host_delay NULL when robots delays are absent so
                     # eff_delay falls back to the global delay
-                    s = self.settings
                     fr2 = self._with_budget_inputs(frontier, None)
-                    delay = max(s.domain_delay_ms, s.download_delay_ms)
-                    eff_delay = F.greatest(
-                        F.coalesce(F.col("__host_delay"), F.lit(0)).cast(
-                            "bigint"
-                        ),
-                        F.lit(delay).cast("bigint"),
+                    eff_delay, round_ms, period, phase = (
+                        self._delay_schedule_cols("bigint")
                     )
-                    round_ms = F.lit(s.round_duration_ms).cast("bigint")
-                    period = F.ceil(eff_delay / round_ms).cast("bigint")
-                    phase = F.pmod(F.xxhash64(F.col("host")), period)
                     # first on-phase round ≥ the row's retry gate
                     nxt = F.when(
                         eff_delay > round_ms,

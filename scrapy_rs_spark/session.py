@@ -49,14 +49,6 @@ def build_session(
         # truncated) machine-read result lines from bench harnesses
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # report sorted output for single-file-per-bucket bucketed
-        # scans (off by default since 3.0 because it lists files at
-        # planning). With the bucketed seen store compacted to one
-        # file per bucket, this elides BOTH the Exchange and the Sort
-        # on the anti-join's seen side — the full storage-partitioned
-        # join. The only bucketed table in this engine is the seen
-        # store, so the planning-time listing cost is bounded.
-        .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -43,14 +43,6 @@ class Settings:
     url_deny_pattern: str | None = None
     # spark-side knobs (no reference analogue; scale levers)
     seen_buckets: int = 32  # hash buckets of the seen-set table (1000s at 10^10)
-    # store the seen set as a Spark bucketed TABLE (bucketBy url_hash +
-    # sortBy, saveAsTable) instead of per-round parquet delta dirs: the
-    # anti-join's seen side then needs NO Exchange — the sandbox
-    # demonstration of the Iceberg storage-partitioned join the 10^10
-    # design relies on (the seen set is never re-shuffled). Off by
-    # default: the delta layout keeps commits O(new urls) without a
-    # catalog; see sources/store.py.
-    bucketed_seen: bool = False
     host_salts: int = 4  # default salt fan-out for hot hosts
     round_duration_ms: int = 10_000  # politeness budget discretization window
     seen_compact_every: int = 16  # fold seen deltas every N rounds

@@ -18,9 +18,10 @@ an Iceberg snapshot commit; resume reads the max committed round
 (reference analogue: EngineState save/load,
 /root/reference/engine/src/lib.rs:1196-1252).
 
-Seen-set = union of seen_delta across committed rounds, hash-bucketed by
-``pmod(url_hash, seen_buckets)`` so membership probes prune buckets and
-the anti-join co-partitions. Deltas keep commits O(new urls), not
+Seen-set = union of seen_delta across committed rounds, partitioned on
+disk by ``pmod(url_hash, seen_buckets)``. The engine's anti-join keys
+on url_hash alone, so membership never depends on the bucket count and
+a store may be reopened with a different ``seen_buckets``. Deltas keep commits O(new urls), not
 O(total seen); `compact_seen` folds deltas when they pile up. The fold
 is tiered so its cost also tracks the new URLs: when the deltas other
 than the largest hold fewer bytes than the largest, only those small
@@ -57,34 +58,13 @@ def _dir_bytes(path: str) -> int:
 
 class CrawlStore:
     def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        seen_buckets: int = 32,
-        bucketed_seen: bool = False,
+        self, spark: SparkSession, root: str, seen_buckets: int = 32
     ):
-        """bucketed_seen=True stores the seen set as a Spark BUCKETED
-        TABLE (bucketBy(url_hash) + sortBy, external location under the
-        store root) instead of per-round parquet delta dirs. The
-        bucketed scan's output partitioning satisfies the anti-join's
-        clustering requirement, so the seen side joins with NO Exchange
-        — the sandbox demonstration of the design's Iceberg
-        storage-partitioned join (SURVEY §4.2): the 10^10-row seen set
-        is never re-shuffled; only the (small) per-round candidate batch
-        is. Commit discipline is preserved: delta rows carry their round
-        number and readers filter to committed rounds, so an interrupted
-        append is invisible (a crash-then-rerun can leave duplicate
-        url_hash rows for one round — harmless to anti-join membership,
-        same guarantee compact_seen documents)."""
         self.spark = spark
         self.root = root
         self.seen_buckets = seen_buckets
-        self.bucketed_seen = bucketed_seen
         os.makedirs(self._rounds_dir(), exist_ok=True)
-        if bucketed_seen:
-            self._ensure_seen_table()
-        else:
-            self._recover_seen_delta_dirs()
+        self._recover_seen_delta_dirs()
 
     def _recover_seen_delta_dirs(self) -> None:
         """Crash recovery for compact_seen's swap: the fold is fully
@@ -103,109 +83,6 @@ class CrawlStore:
                 os.replace(tmp if os.path.isdir(tmp) else bak, main)
             shutil.rmtree(tmp, ignore_errors=True)
             shutil.rmtree(bak, ignore_errors=True)
-
-    # ---- bucketed seen table ----
-    @property
-    def _seen_table(self) -> str:
-        import hashlib
-
-        tag = hashlib.md5(
-            os.path.abspath(self.root).encode()
-        ).hexdigest()[:12]
-        return f"crawl_seen_{tag}"
-
-    def _seen_table_path(self) -> str:
-        return os.path.join(self.root, "seen_bucketed")
-
-    def _seen_meta_path(self) -> str:
-        return os.path.join(self.root, "seen_bucketed_meta.json")
-
-    def _recover_seen_table_dir(self) -> None:
-        """Crash recovery for _compact_seen_bucketed's rename window: the
-        compacted table is fully written to ``seen_bucketed_compact``
-        BEFORE the two renames (main → ``_old``, ``_compact`` → main), so
-        a crash between them leaves main missing with the complete data
-        in one (or both) side dirs. Without this, a restart would
-        register NO seen table and silently treat the whole crawl
-        history as unseen. Prefer the compacted dir (the newer state);
-        fall back to the pre-compaction backup."""
-        path = self._seen_table_path()
-        if os.path.isdir(path):
-            return
-        tmp = path + "_compact"
-        bak = path + "_old"
-        for cand in (tmp, bak):
-            if os.path.isdir(cand):
-                os.replace(cand, path)
-                break
-        else:
-            return
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(bak, ignore_errors=True)
-
-    def _check_seen_meta(self) -> None:
-        """Pin the bucket count at table creation. Bucketing is declared
-        per-session from CURRENT settings (``CLUSTERED BY ... INTO N
-        BUCKETS`` over existing files); resuming with a different
-        ``seen_buckets`` would silently declare WRONG bucketing over the
-        on-disk layout and the exchange-free anti-join could mis-cluster
-        — letting already-seen URLs through. Fail loud instead."""
-        meta = self._seen_meta_path()
-        if os.path.exists(meta):
-            with open(meta) as f:
-                stored = json.load(f).get("seen_buckets")
-            if stored != self.seen_buckets:
-                raise ValueError(
-                    f"seen_bucketed table at {self._seen_table_path()} was"
-                    f" created with seen_buckets={stored}; this store was"
-                    f" opened with seen_buckets={self.seen_buckets}."
-                    " Reopen with the original bucket count (or compact"
-                    " with the original count first)."
-                )
-        else:
-            tmp = meta + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"seen_buckets": self.seen_buckets}, f)
-            os.replace(tmp, meta)
-
-    def _ensure_seen_table(self) -> None:
-        """Register the bucketed seen table in the session catalog.
-        Bucketing metadata lives in the CATALOG, not the files — a new
-        session (resume) must re-register the existing location or the
-        scan degrades to a plain parquet read (and the anti-join would
-        re-shuffle the seen side)."""
-        self._recover_seen_table_dir()
-        self._check_seen_meta()
-        if self.spark.catalog.tableExists(self._seen_table):
-            return
-        path = self._seen_table_path()
-        if os.path.isdir(path):
-            # resume in a fresh session: re-attach the existing data
-            self.spark.sql(
-                f"CREATE TABLE {self._seen_table}"
-                " (url_hash BIGINT, bucket INT, round INT)"
-                " USING parquet"
-                " CLUSTERED BY (url_hash) SORTED BY (url_hash)"
-                f" INTO {self.seen_buckets} BUCKETS"
-                f" LOCATION '{path}'"
-            )
-
-    def _append_seen_bucketed(self, seen_delta: DataFrame, rnd: int) -> None:
-        (
-            seen_delta.select(
-                F.col("url_hash").cast("bigint").alias("url_hash"),
-                F.pmod(F.col("url_hash"), F.lit(self.seen_buckets))
-                .cast("int")
-                .alias("bucket"),
-                F.lit(rnd).cast("int").alias("round"),
-            )
-            .write.format("parquet")
-            .bucketBy(self.seen_buckets, "url_hash")
-            .sortBy("url_hash")
-            .option("path", self._seen_table_path())
-            .mode("append")
-            .saveAsTable(self._seen_table)
-        )
 
     # ---- layout ----
     def _rounds_dir(self) -> str:
@@ -235,21 +112,12 @@ class CrawlStore:
     # ---- commit ----
     def begin_round(self, rnd: int) -> None:
         """Clear any uncommitted leftovers for a round so partial writes
-        (write_items before commit_round) start from a clean dir. The
-        (empty) dir is created so a round whose parquet all lands
-        elsewhere (bucketed seen table) can still seal metrics/MANIFEST
-        into it.
-
-        A leftover round dir means an earlier attempt crashed after
-        begin_round; in the bucketed layout that attempt may also have
-        appended seen rows tagged with this round. Those files are
-        deleted too, or the re-run's lineage would count the round's
-        seen delta twice."""
+        (write_items before commit_round) start from a clean dir. Every
+        dataset of a round, seen delta included, lives inside the round
+        dir, so removing a crashed attempt's dir removes all it wrote."""
         d = self._round_dir(rnd)
         if os.path.exists(d):
             shutil.rmtree(d)  # re-running an uncommitted round is safe
-            if self.bucketed_seen:
-                self._drop_bucketed_round(rnd)
         os.makedirs(d, exist_ok=True)
 
     def write_items(self, rnd: int, items: DataFrame | None) -> None:
@@ -273,17 +141,9 @@ class CrawlStore:
 
     def write_seen_delta(self, rnd: int, seen_delta: DataFrame) -> None:
         """Stage a round's seen delta ahead of commit_round (invisible
-        to readers until MANIFEST: the plain layout lives inside the
-        round dir, the bucketed table tags rows with the round and
-        readers filter to committed rounds). Lets the engine overlap
-        the items / frontier / seen writes; pass seen_delta=None to
-        commit_round afterwards."""
-        if self.bucketed_seen:
-            # append into the bucketed table, tagged with the round;
-            # readers filter to committed rounds so this stays invisible
-            # until MANIFEST lands
-            self._append_seen_bucketed(seen_delta, rnd)
-            return
+        to readers until MANIFEST: it lives inside the round dir). Lets
+        the engine overlap the items / frontier / seen writes; pass
+        seen_delta=None to commit_round afterwards."""
         self._write_seen_buckets(
             seen_delta.withColumn(
                 "bucket",
@@ -365,29 +225,6 @@ class CrawlStore:
 
     def load_seen(self, upto_round: int | None = None) -> DataFrame:
         """Union of committed seen deltas ≤ upto_round."""
-        if self.bucketed_seen:
-            # one bucketed-table scan, filtered to committed rounds
-            # (uncommitted appends are always > the latest committed
-            # round — rounds commit in order). The filter is a cheap
-            # data filter; the scan keeps its bucketed output
-            # partitioning, so downstream anti-joins need no Exchange
-            # on this side.
-            self._ensure_seen_table()
-            if not self.spark.catalog.tableExists(self._seen_table):
-                return self.spark.createDataFrame(
-                    [], "url_hash BIGINT, bucket INT"
-                )
-            latest = self.latest_round()
-            if latest is None:
-                return self.spark.createDataFrame(
-                    [], "url_hash BIGINT, bucket INT"
-                )
-            cutoff = latest if upto_round is None else min(latest, upto_round)
-            return (
-                self.spark.table(self._seen_table)
-                .filter(F.col("round") <= F.lit(cutoff))
-                .select("url_hash", "bucket")
-            )
         rounds = self.committed_rounds()
         if upto_round is not None:
             rounds = [r for r in rounds if r <= upto_round]
@@ -477,9 +314,6 @@ class CrawlStore:
         leaves duplicate url_hash rows. Bumps seen_generation() last so
         incremental-cache holders notice the in-place rewrite of the
         target delta dir."""
-        if self.bucketed_seen:
-            self._compact_seen_bucketed()
-            return
         sizes = {
             r: _dir_bytes(self._seen_delta_dir(r))
             for r in self.seen_delta_rounds()
@@ -508,61 +342,6 @@ class CrawlStore:
         shutil.rmtree(bak, ignore_errors=True)
         for r in fold[:-1]:
             shutil.rmtree(self._seen_delta_dir(r), ignore_errors=True)
-        self._bump_seen_generation()
-
-    def _compact_seen_bucketed(self) -> None:
-        """Rewrite the bucketed seen table to ONE file per bucket
-        (Iceberg analogue: rewrite_data_files). Appends land 1 file per
-        bucket per round, so a long crawl accumulates buckets×rounds
-        files — a 10^5-round standing crawl would hold millions — and a
-        bucket spread over many files forfeits the SORTED BY metadata
-        (Spark only reports sorted scan output for single-file buckets),
-        so every anti-join re-sorts the seen side. Compaction restores
-        both bounds: file count = buckets, and the SMJ's seen-side Sort
-        is elided.
-
-        Crash-safety mirrors compact_seen's plain path: the folded table
-        is fully written to a side location first, then swapped in with
-        two renames; a crash between them leaves either the old data or
-        a recoverable ``seen_bucketed_old`` (plus at worst duplicate
-        url_hash rows, harmless to anti-join membership). The catalog
-        entries are session-scoped metadata and are re-registered from
-        the on-disk location afterwards."""
-        latest = self.latest_round()
-        if latest is None:
-            return
-        main = self._seen_table_path()
-        if not os.path.isdir(main):
-            return
-        tmp = main + "_compact"
-        bak = main + "_old"
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(bak, ignore_errors=True)
-        tmp_table = self._seen_table + "_compact"
-        folded = (
-            self.load_seen()  # committed rounds only
-            .dropDuplicates(["url_hash"])
-            .withColumn("round", F.lit(latest).cast("int"))
-            .select("url_hash", "bucket", "round")
-            # one output file per bucket: coalesce writer tasks to the
-            # bucket count so each bucket's rows land in a single task
-            .repartition(self.seen_buckets, F.col("url_hash"))
-        )
-        (
-            folded.write.format("parquet")
-            .bucketBy(self.seen_buckets, "url_hash")
-            .sortBy("url_hash")
-            .option("path", tmp)
-            .mode("overwrite")
-            .saveAsTable(tmp_table)
-        )
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {self._seen_table}")
-        os.replace(main, bak)
-        os.replace(tmp, main)
-        shutil.rmtree(bak, ignore_errors=True)
-        self._ensure_seen_table()
-        self.spark.catalog.refreshTable(self._seen_table)
         self._bump_seen_generation()
 
     def load_host_served(self, rnd: int) -> DataFrame:
@@ -648,79 +427,6 @@ class CrawlStore:
                             "bytes": os.path.getsize(fp),
                         }
                     )
-        if self.bucketed_seen:
-            out.extend(self._bucketed_delta_lineage(rnd))
-        return out
-
-    def _bucketed_round_files(self, rnd: int) -> list[tuple[str, object]]:
-        """(path, parquet metadata) of every bucketed-seen file written
-        by round rnd's append, identified by footer statistics: every
-        row group has round min == max == rnd (each append writes only
-        its own round tag; a compacted file carries the latest
-        committed round, never an uncommitted one)."""
-        import pyarrow.parquet as pq
-
-        loc = self._seen_table_path()
-        if not os.path.isdir(loc):
-            return []
-        out = []
-        for dirpath, _dirs, files in os.walk(loc):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                fp = os.path.join(dirpath, fn)
-                md = pq.ParquetFile(fp).metadata
-                names = md.schema.to_arrow_schema().names
-                if "round" not in names:
-                    continue
-                ci = names.index("round")
-                stats = [
-                    md.row_group(g).column(ci).statistics
-                    for g in range(md.num_row_groups)
-                ]
-                if stats and all(
-                    s is not None and s.min == rnd and s.max == rnd
-                    for s in stats
-                ):
-                    out.append((fp, md))
-        return out
-
-    def _drop_bucketed_round(self, rnd: int) -> None:
-        """Delete an uncommitted round's bucketed-seen append (the
-        leftovers of a crashed attempt) and refresh the catalog's file
-        listing so later scans do not look for the deleted files."""
-        files = self._bucketed_round_files(rnd)
-        for fp, _md in files:
-            os.remove(fp)
-        if files and self.spark.catalog.tableExists(self._seen_table):
-            self.spark.catalog.refreshTable(self._seen_table)
-
-    def _bucketed_delta_lineage(self, rnd: int) -> list[dict]:
-        """Lineage for a bucketed-seen append: the round's delta rows
-        live inside the shared bucketed table, so the round's files are
-        identified by their footer statistics (_bucketed_round_files).
-        The bucket id is the Spark bucketed-file suffix
-        (part-XXXXX-<uuid>_NNNNN.*). Records taken at commit time stay
-        valid as historical commit records even after compact_seen
-        rewrites the table."""
-        import re
-
-        out = []
-        for fp, md in self._bucketed_round_files(rnd):
-            fn = os.path.basename(fp)
-            m = re.search(r"_(\d{5})\.", fn)
-            out.append(
-                {
-                    "round": rnd,
-                    "dataset": "seen_delta",
-                    "partition": (
-                        f"bucket={int(m.group(1))}" if m else ""
-                    ),
-                    "file": fn,
-                    "rows": md.num_rows,
-                    "bytes": os.path.getsize(fp),
-                }
-            )
         return out
 
     def load_lineage(self, rounds: list[int] | None = None) -> list[dict]:

@@ -475,9 +475,13 @@ def fetch_cdx_record(
     """Random access: read ONLY the indexed byte range of a segment
     file and parse the record(s) in it — rows in read_warc's column
     order. `source_file` accepts a plain path or the file: URI
-    binaryFile puts in the index."""
+    binaryFile puts in the index. A URI indexed raw (not
+    percent-encoded) may name a file whose name holds a literal
+    ``%XX``; when the unquoted path does not exist, the raw path is
+    opened instead."""
     p = source_file
     if p.startswith("file:"):
+        import os
         from urllib.parse import unquote, urlparse
 
         parts = urlparse(p)
@@ -487,6 +491,8 @@ def fetch_cdx_record(
                 f"{source_file!r} (netloc={parts.netloc!r})"
             )
         p = unquote(parts.path)
+        if not os.path.exists(p):
+            p = parts.path
     with open(p, "rb") as f:
         f.seek(int(offset))
         blob = f.read(int(length))

@@ -1,23 +1,18 @@
 """Round-5 fixes & features: empty-pairs convergence in dedup_clusters,
 NULL-priority sentinel outside int32, seen-cache generation marker,
-bucketed (shuffle-free) seen store + plan assertion, skew-safe
-lsh_star_edges, Settings.from_module, bounded close lifecycle.
+skew-safe lsh_star_edges, Settings.from_module, bounded close lifecycle.
 
 Reference anchors: python/src/lib.rs:1065-1075 (PySettings.from_module),
-engine/src/lib.rs:1285-1420 (close hooks each bounded by 5 s timeouts),
-SURVEY §4.2 (storage-partitioned seen join — the 10^10 design's central
-shuffle claim, demonstrated here via Spark bucketed tables).
+engine/src/lib.rs:1285-1420 (close hooks each bounded by 5 s timeouts).
 """
 
 import time
 import types
 
 import pyspark.sql.functions as F
-import pytest
 
 from scrapy_rs_spark.plans.engine import CrawlEngine
 from scrapy_rs_spark.settings import Settings
-from scrapy_rs_spark.sources.store import CrawlStore
 
 
 # ---- ADVICE r4 (high): dedup_clusters on an empty pair set ----
@@ -111,175 +106,6 @@ def test_external_compact_invalidates_seen_cache(spark, tmp_path):
     # without the generation check this collect hits deleted files
     after = eng._load_seen().count()
     assert after == before
-
-
-# ---- bucketed seen store: the shuffle-free probe (VERDICT r4 ask #1) ----
-
-def _final_plan(df) -> str:
-    """Execute df and return the FINAL adaptive plan text only (the
-    AdaptiveSparkPlan string repeats the initial plan below it)."""
-    df.collect()
-    full = df._jdf.queryExecution().executedPlan().toString()
-    return full.split("== Initial Plan ==")[0]
-
-
-def _commit_seen(store, spark, rnd, lo, hi):
-    delta = spark.range(lo, hi).select(F.xxhash64("id").alias("url_hash"))
-    frontier = delta.withColumn("url", F.lit("x"))
-    store.commit_round(rnd, frontier, delta, None, None, {"round": rnd})
-
-
-@pytest.fixture()
-def no_broadcast(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_seen_anti_join_has_no_seen_side_exchange(
-    spark, tmp_path, no_broadcast
-):
-    """THE storage-partitioned-join demonstration: with the bucketed
-    seen table, the anti-join plan contains exactly ONE Exchange (the
-    small candidate batch) — the seen side reads bucketed
-    (Bucketed: true) and is never re-shuffled. The plain parquet layout
-    pays two."""
-    from scrapy_rs_spark.operators.dedup import anti_join_seen
-
-    cands = spark.range(6000, 9000).select(
-        F.xxhash64("id").alias("url_hash"), F.lit(1).alias("depth")
-    )
-
-    st_b = CrawlStore(
-        spark, str(tmp_path / "bucketed"), seen_buckets=4, bucketed_seen=True
-    )
-    _commit_seen(st_b, spark, 0, 0, 5000)
-    _commit_seen(st_b, spark, 1, 5000, 8000)
-    plan_b = _final_plan(anti_join_seen(cands, st_b.load_seen()))
-
-    st_p = CrawlStore(spark, str(tmp_path / "plain"), seen_buckets=4)
-    _commit_seen(st_p, spark, 0, 0, 5000)
-    _commit_seen(st_p, spark, 1, 5000, 8000)
-    plan_p = _final_plan(anti_join_seen(cands, st_p.load_seen()))
-
-    assert "Bucketed: true" in plan_b
-    assert plan_b.count("Exchange") == 1  # candidates side only
-    assert plan_p.count("Exchange") == 2  # both sides shuffle
-    # and the committed-round filter reaches the scan
-    assert "PushedFilters" in plan_b and "LessThanOrEqual(round" in plan_b
-
-
-def test_bucketed_seen_membership_matches_plain(spark, tmp_path):
-    """Same crawl, both stores: identical request counts, rounds and
-    seen membership — the bucketed layout changes the PLAN, never the
-    answer."""
-    from scrapy_rs_spark.sources.mocksite import mock_site_pages
-
-    pages = mock_site_pages(spark, page_count=120, links_per_page=4)
-    results = {}
-    for mode in (False, True):
-        eng = CrawlEngine(
-            spark,
-            pages,
-            Settings(scheduler_type="breadth_first", bucketed_seen=mode),
-            store_path=str(tmp_path / f"store_{mode}"),
-        )
-        stats = eng.run(["http://mocksite.test/0"], max_rounds=50)
-        seen = sorted(
-            r.url_hash
-            for r in eng.seen().select("url_hash").distinct().collect()
-        )
-        results[mode] = (stats.requests, stats.rounds, seen)
-    assert results[True] == results[False]
-
-
-def test_bucketed_seen_uncommitted_round_invisible(spark, tmp_path):
-    """Rows appended for a round that never got its MANIFEST must not
-    appear in load_seen (the manifest-last commit discipline holds for
-    the bucketed layout via the round-number filter)."""
-    st = CrawlStore(
-        spark, str(tmp_path / "store"), seen_buckets=4, bucketed_seen=True
-    )
-    _commit_seen(st, spark, 0, 0, 100)
-    # simulate a crashed round 1: append without MANIFEST
-    delta = spark.range(100, 200).select(F.xxhash64("id").alias("url_hash"))
-    st._append_seen_bucketed(delta, 1)
-    assert st.load_seen().count() == 100
-
-
-def test_bucketed_seen_compaction_bounds_files_and_elides_sort(
-    spark, tmp_path, no_broadcast
-):
-    """compact_seen in bucketed mode rewrites the table to ONE file per
-    bucket (Iceberg rewrite_data_files analogue). Appends land
-    1 file/bucket/round, so a standing crawl accumulates
-    buckets×rounds files, and multi-file buckets forfeit the SORTED BY
-    metadata — the anti-join re-sorts the seen side every round.
-    Post-compact: file count == buckets, membership unchanged, plan
-    still exchange-free on the seen side AND its Sort is elided."""
-    import os
-
-    from scrapy_rs_spark.operators.dedup import anti_join_seen
-
-    st = CrawlStore(
-        spark, str(tmp_path / "store"), seen_buckets=4, bucketed_seen=True
-    )
-    for r in range(4):
-        _commit_seen(st, spark, r, r * 1000, (r + 1) * 1000)
-    cands = spark.range(3500, 5500).select(
-        F.xxhash64("id").alias("url_hash"), F.lit(1).alias("depth")
-    )
-    before = sorted(
-        r.url_hash for r in st.load_seen().distinct().collect()
-    )
-    plan_pre = _final_plan(anti_join_seen(cands, st.load_seen()))
-    # multi-file buckets: both SMJ sides carry a Sort node
-    assert plan_pre.count(" Sort [") == 2
-    gen0 = st.seen_generation()
-    st.compact_seen()
-    assert st.seen_generation() == gen0 + 1
-    files = [
-        f
-        for f in os.listdir(st._seen_table_path())
-        if f.endswith(".parquet")
-    ]
-    assert len(files) == 4  # one per bucket
-    after = sorted(r.url_hash for r in st.load_seen().distinct().collect())
-    assert after == before
-    plan_post = _final_plan(anti_join_seen(cands, st.load_seen()))
-    assert "Bucketed: true" in plan_post
-    assert plan_post.count("Exchange") == 1  # candidates side only
-    # single-file buckets: the seen-side Sort is gone (candidates only)
-    assert plan_post.count(" Sort [") == 1
-
-
-def test_bucketed_seen_reregisters_in_fresh_session(
-    spark, tmp_path, no_broadcast
-):
-    """Bucketing metadata lives in the session catalog; a resume in a
-    new session must re-attach the existing location (or the scan
-    silently degrades to a re-shuffling parquet read). Asserted on the
-    anti-join plan — a bare scan legitimately reads unbucketed
-    (autoBucketedScan disables bucketing when no operator needs the
-    clustering)."""
-    from scrapy_rs_spark.operators.dedup import anti_join_seen
-
-    root = str(tmp_path / "store")
-    st = CrawlStore(spark, root, seen_buckets=4, bucketed_seen=True)
-    _commit_seen(st, spark, 0, 0, 500)
-    # simulate a fresh session: drop the catalog entry, keep the files
-    spark.sql(f"DROP TABLE {st._seen_table}")
-    st2 = CrawlStore(spark, root, seen_buckets=4, bucketed_seen=True)
-    assert st2.load_seen().count() == 500
-    cands = spark.range(0, 800).select(
-        F.xxhash64("id").alias("url_hash"), F.lit(1).alias("depth")
-    )
-    plan = _final_plan(anti_join_seen(cands, st2.load_seen()))
-    assert "Bucketed: true" in plan
-    assert plan.count("Exchange") == 1  # seen side still shuffle-free
 
 
 # ---- skew-safe lsh_star_edges (VERDICT r4 ask #3) ----

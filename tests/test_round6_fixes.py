@@ -257,8 +257,7 @@ def test_round_rdds_released_after_crawl(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE correctness fixes (store recovery, bucket pinning, CDX URIs,
-# sitemap seed collapse)
+# ADVICE correctness fixes (CDX URIs, sitemap seed collapse)
 # ---------------------------------------------------------------------------
 
 def _commit_seen(spark, store, rnd, hashes):
@@ -272,60 +271,6 @@ def _commit_seen(spark, store, rnd, hashes):
         None,
         {"round": rnd},
     )
-
-
-def test_bucketed_seen_recovers_from_compaction_crash(spark, tmp_path):
-    """Crash window in _compact_seen_bucketed: main dir renamed away
-    before the compacted dir is renamed in. A restart must restore the
-    seen set from the side dirs, never silently report it empty."""
-    import os
-    import shutil
-
-    from scrapy_rs_spark.sources.store import CrawlStore
-
-    root = str(tmp_path / "rec")
-    store = CrawlStore(spark, root, seen_buckets=4, bucketed_seen=True)
-    _commit_seen(spark, store, 1, range(40))
-    _commit_seen(spark, store, 2, range(40, 60))
-    expect = set(range(60))
-    main = store._seen_table_path()
-
-    # window A: crash right after os.replace(main, bak) — the complete
-    # compacted table sits in _compact, the pre-compaction data in _old
-    shutil.copytree(main, main + "_compact")
-    os.replace(main, main + "_old")
-    spark.sql(f"DROP TABLE IF EXISTS {store._seen_table}")  # simulate restart
-    store2 = CrawlStore(spark, root, seen_buckets=4, bucketed_seen=True)
-    assert {r.url_hash for r in store2.load_seen().collect()} == expect
-    assert os.path.isdir(main)
-    assert not os.path.isdir(main + "_compact")
-    assert not os.path.isdir(main + "_old")
-
-    # window B: only the backup remains (crash before tmp was complete
-    # never removes main, but belt-and-braces: _old alone restores too)
-    os.replace(main, main + "_old")
-    spark.sql(f"DROP TABLE IF EXISTS {store2._seen_table}")
-    store3 = CrawlStore(spark, root, seen_buckets=4, bucketed_seen=True)
-    assert {r.url_hash for r in store3.load_seen().collect()} == expect
-
-
-def test_bucketed_seen_rejects_bucket_count_mismatch(spark, tmp_path):
-    """Reopening a bucketed store with a different seen_buckets must
-    fail loud — re-declaring bucketing over existing files would let
-    the exchange-free anti-join mis-cluster."""
-    import pytest
-
-    from scrapy_rs_spark.sources.store import CrawlStore
-
-    root = str(tmp_path / "meta")
-    store = CrawlStore(spark, root, seen_buckets=4, bucketed_seen=True)
-    _commit_seen(spark, store, 1, range(10))
-    spark.sql(f"DROP TABLE IF EXISTS {store._seen_table}")
-    with pytest.raises(ValueError, match="seen_buckets=4"):
-        CrawlStore(spark, root, seen_buckets=8, bucketed_seen=True)
-    # original count still works
-    store2 = CrawlStore(spark, root, seen_buckets=4, bucketed_seen=True)
-    assert store2.load_seen().count() == 10
 
 
 def test_fetch_cdx_record_file_uri_forms(tmp_path):
@@ -394,33 +339,29 @@ def test_staged_seen_delta_commit_equivalence(spark, tmp_path):
     MANIFEST lands."""
     from scrapy_rs_spark.sources.store import CrawlStore
 
-    for bucketed in (False, True):
-        root = str(tmp_path / f"staged_{bucketed}")
-        store = CrawlStore(
-            spark, root, seen_buckets=4, bucketed_seen=bucketed
-        )
-        _commit_seen(spark, store, 1, range(30))
+    store = CrawlStore(spark, str(tmp_path / "staged"), seen_buckets=4)
+    _commit_seen(spark, store, 1, range(30))
 
-        # round 2 staged piecewise, commit sealed with all-None
-        store.begin_round(2)
-        store.write_seen_delta(
-            2, spark.createDataFrame([(h,) for h in range(30, 55)],
-                                     "url_hash BIGINT")
-        )
-        # staged but uncommitted → invisible to readers
-        assert {r.url_hash for r in store.load_seen().collect()} == set(
-            range(30)
-        )
-        store.commit_round(2, None, None, None, None, {"round": 2},
-                           clean=False)
-        assert {r.url_hash for r in store.load_seen().collect()} == set(
-            range(55)
-        )
-        # bucket column preserved for partition-pruned probes
-        assert {r.bucket for r in store.load_seen().collect()} <= {0, 1, 2, 3}
-        # lineage recorded the staged delta's files like a direct commit
-        rows = [
-            r for r in store.load_lineage()
-            if r["round"] == 2 and r["dataset"] == "seen_delta"
-        ]
-        assert sum(r["rows"] for r in rows) == 25
+    # round 2 staged piecewise, commit sealed with all-None
+    store.begin_round(2)
+    store.write_seen_delta(
+        2, spark.createDataFrame([(h,) for h in range(30, 55)],
+                                 "url_hash BIGINT")
+    )
+    # staged but uncommitted → invisible to readers
+    assert {r.url_hash for r in store.load_seen().collect()} == set(
+        range(30)
+    )
+    store.commit_round(2, None, None, None, None, {"round": 2},
+                       clean=False)
+    assert {r.url_hash for r in store.load_seen().collect()} == set(
+        range(55)
+    )
+    # bucket column preserved for partition-pruned probes
+    assert {r.bucket for r in store.load_seen().collect()} <= {0, 1, 2, 3}
+    # lineage recorded the staged delta's files like a direct commit
+    rows = [
+        r for r in store.load_lineage()
+        if r["round"] == 2 and r["dataset"] == "seen_delta"
+    ]
+    assert sum(r["rows"] for r in rows) == 25

@@ -1,6 +1,5 @@
 """A crawl round's fixed cost: the fused parse UDF, tiered seen
-compaction, bucket-clustered seen writes, and the bucketed-seen
-crash-then-rerun cleanup."""
+compaction and bucket-clustered seen writes."""
 
 import html as htmllib
 import os
@@ -397,46 +396,3 @@ def test_seen_writes_one_file_per_bucket(spark, tmp_path, buckets):
     assert all(len(fs) == 1 for fs in per.values())
     assert store.load_seen().count() == 9_000
 
-
-# ---- bucketed seen: crash-then-rerun leaves no orphan files ----
-
-def test_bucketed_rerun_drops_crashed_attempt_files(spark, tmp_path):
-    """A round that crashed after its bucketed-seen append is re-run:
-    begin_round deletes the first attempt's files, so the committed
-    lineage counts the round's seen delta once and membership holds."""
-    pages = mock_site_pages(spark, page_count=40, links_per_page=3)
-    settings = Settings(
-        scheduler_type="breadth_first",
-        bucketed_seen=True,
-        seen_buckets=4,
-        seen_compact_every=1 << 30,
-    )
-    root = str(tmp_path / "store")
-    eng = CrawlEngine(spark, pages, settings, store_path=root)
-    eng.run(["http://mocksite.test/0"], max_rounds=1)
-
-    real_commit = eng.store.commit_round
-
-    def crash(*args, **kwargs):
-        raise RuntimeError("simulated crash before MANIFEST")
-
-    eng.store.commit_round = crash
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        eng.resume(max_rounds=2)
-    assert eng.store.latest_round() == 1
-    assert eng.store._bucketed_round_files(2)  # the orphaned append
-
-    eng.store.commit_round = real_commit
-    eng = CrawlEngine(spark, pages, settings, store_path=root)
-    stats = eng.resume(max_rounds=2)
-    m2 = stats.per_round[-1]
-    assert m2["round"] == 2 and m2["new_urls"] > 0
-    lineage = [
-        r for r in eng.store.load_lineage([2])
-        if r["dataset"] == "seen_delta"
-    ]
-    assert sum(r["rows"] for r in lineage) == m2["new_urls"]
-    seen = [r.url_hash for r in eng.store.load_seen().collect()]
-    assert len(seen) == len(set(seen)) == sum(
-        m["new_urls"] for m in stats.per_round
-    )

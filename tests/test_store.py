@@ -91,29 +91,52 @@ def test_lineage_plain_store_reconciles_with_deltas(spark, tmp_path):
     assert agg[(2, "seen_delta")] == 30
 
 
-def test_lineage_bucketed_store_attributes_rounds(spark, tmp_path):
-    """Bucketed-seen lineage identifies each append's files inside the
-    shared table via footer round-statistics: per-round sums match the
-    delta sizes even though all rounds share one table directory."""
-    store = CrawlStore(
-        spark, str(tmp_path / "linb"), seen_buckets=4, bucketed_seen=True
+
+def test_seen_membership_independent_of_bucket_count(spark, tmp_path):
+    """The bucket count is an on-disk layout, not part of membership:
+    rounds committed with seen_buckets=4 and resumed with
+    seen_buckets=8 read back the same seen set, survive a compaction
+    that folds both layouts, and re-enqueue no already-seen url_hash
+    (every page is fetched exactly once)."""
+    from dataclasses import replace
+
+    from scrapy_rs_spark.plans.engine import CrawlEngine
+    from scrapy_rs_spark.settings import Settings
+    from scrapy_rs_spark.sources.mocksite import mock_site_pages
+
+    # 30 pages, 15 links: rounds 1-3 fetch 1, 15, 14 pages
+    n_pages = 30
+    pages = mock_site_pages(spark, page_count=n_pages, links_per_page=15)
+    s4 = Settings(
+        scheduler_type="breadth_first",
+        seen_buckets=4,
+        seen_compact_every=1 << 30,  # compaction only where called below
     )
-    store.commit_round(
-        1, _empty_frontier(spark), _seen_rows(spark, range(50)), None,
-        None, {"round": 1},
+    root = str(tmp_path / "rebucket")
+    eng = CrawlEngine(spark, pages, s4, store_path=root)
+    eng.run(["http://mocksite.test/0"], max_rounds=1)
+    last = eng.store.latest_round()
+    before = sorted(tuple(r) for r in eng.store.load_seen().collect())
+    seen_before = {h for h, _ in before}
+    assert 1 < len(seen_before) < n_pages  # the crawl is mid-way
+
+    eng = CrawlEngine(
+        spark, pages, replace(s4, seen_buckets=8), store_path=root
     )
-    store.commit_round(
-        2, _empty_frontier(spark), _seen_rows(spark, range(50, 70)), None,
-        None, {"round": 2},
-    )
-    lin = store.load_lineage()
-    for rnd, expect in ((1, 50), (2, 20)):
-        rows = [
-            r for r in lin
-            if r["round"] == rnd and r["dataset"] == "seen_delta"
-        ]
-        assert sum(r["rows"] for r in rows) == expect
-        assert all(r["partition"].startswith("bucket=") for r in rows)
-    # lineage survives compaction as a historical commit record
-    store.compact_seen()
-    assert store.load_lineage() == lin
+    assert sorted(tuple(r) for r in eng.store.load_seen().collect()) == before
+    eng.store.compact_seen()
+    assert {r.url_hash for r in eng.store.load_seen().collect()} == seen_before
+
+    stats = eng.resume()
+    assert [m["requests"] for m in stats.per_round[2:]] == [15, 14]
+    fresh = [
+        r.url_hash
+        for rnd in sorted(eng.store.seen_delta_rounds())
+        if rnd > last
+        for r in eng.store.load_seen_delta(rnd).collect()
+    ]
+    assert fresh and not set(fresh) & seen_before
+    seen = [r.url_hash for r in eng.store.load_seen().collect()]
+    assert len(seen) == len(set(seen)) == n_pages
+    items = [r.url for r in eng.items().collect()]
+    assert len(items) == len(set(items)) == n_pages

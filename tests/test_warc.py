@@ -280,6 +280,20 @@ def test_cdx_index_and_random_access(spark, tmp_path):
     assert sum(l for _, l in plain) == len(raw)
 
 
+def test_fetch_cdx_record_raw_uri_with_literal_percent(tmp_path):
+    """A segment whose name holds a literal ``%25``, indexed with a raw
+    (not percent-encoded) file: URI: unquoting would look for
+    ``100%off.warc``, so the raw path must be opened instead."""
+    from scrapy_rs_spark.sources.warc import fetch_cdx_record
+
+    rec = build_response_record("http://warc.test/p", EPOCH, b"<p>p</p>")
+    seg = tmp_path / "100%25off.warc"
+    seg.write_bytes(rec)
+    got = fetch_cdx_record("file://" + str(seg), 0, len(rec))
+    assert len(got) == 1 and got[0][0] == "http://warc.test/p"
+    assert bytes(got[0][5]) == b"<p>p</p>"
+
+
 def test_stream_warc_incremental_ingest(spark, tmp_path):
     """Standing ingest: an availableNow pass parses the files present;
     a second pass on the same checkpoint parses ONLY a newly-landed
