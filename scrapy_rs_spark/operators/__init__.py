@@ -4,6 +4,7 @@ from scrapy_rs_spark.operators.scheduler import (
     effective_priority_col,
     frontier_order,
     per_host_topk,
+    rank_per_host,
     take_batch,
 )
 from scrapy_rs_spark.operators.dedup import (
@@ -47,6 +48,7 @@ __all__ = [
     "effective_priority_col",
     "frontier_order",
     "per_host_topk",
+    "rank_per_host",
     "take_batch",
     "dedup_in_batch",
     "anti_join_seen",

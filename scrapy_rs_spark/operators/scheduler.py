@@ -25,9 +25,11 @@ Scale notes:
 * global batch selection is orderBy().limit(k) — Catalyst compiles it
   to TakeOrderedAndProject (per-partition partial top-k + merge), never
   a single-task global sort;
-* per-host ranking is a Window partitioned by host; hot hosts (10^8
-  URLs on one domain) are pre-thinned with a salted two-phase top-k so
-  no single task materializes a whole domain (see per_host_topk).
+* per-host ranking is a Window partitioned by host (rank_per_host);
+  hot hosts (10^8 URLs on one domain) are pre-thinned with a salted
+  two-phase rank so no single task materializes a whole domain. One
+  rank yields both a round's batch (host_rank ≤ budget) and its
+  leftover (NULL or over budget); per_host_topk is its ≤ k filter.
 """
 
 from __future__ import annotations
@@ -150,6 +152,39 @@ def robots_filter(df: DataFrame, robots: DataFrame) -> DataFrame:
     return out.drop("__r_allow") if has_allow else out
 
 
+def rank_per_host(
+    df: DataFrame,
+    k: int | Column,
+    order: list[Column],
+    salts: int = 1,
+    host_col: str = "host",
+) -> DataFrame:
+    """Every row of `df` with host_rank = its exact rank within its host
+    under `order`, or NULL where that rank is known to exceed k.
+
+    With salts > 1, a two-phase rank avoids hot-host skew: phase 1 ranks
+    within (host, salt) — salt = pmod(url_hash, salts) spreads one
+    domain over many tasks; a row with k rows ahead of it in its salt
+    ranks > k in its host (NULL). Phase 2 ranks the ≤ salts·k survivors
+    exactly per host; both branches read phase 1's one shuffle (reused
+    exchange). No task holds a whole domain (north rule: a 10^10
+    frontier must not concentrate on one executor)."""
+    w2 = Window.partitionBy(host_col).orderBy(*order)
+    if salts <= 1:
+        return df.withColumn("host_rank", F.row_number().over(w2))
+    salt = F.pmod(F.coalesce(F.col("url_hash"), F.lit(0)), F.lit(salts))
+    w1 = Window.partitionBy(F.col(host_col), salt).orderBy(*order)
+    phase1 = df.withColumn("__rn1", F.row_number().over(w1))
+    keep = F.col("__rn1") <= k
+    survivors = phase1.filter(keep).withColumn(
+        "host_rank", F.row_number().over(w2)
+    )
+    cut = phase1.filter(~keep).withColumn(
+        "host_rank", F.lit(None).cast("int")
+    )
+    return survivors.unionByName(cut).drop("__rn1")
+
+
 def per_host_topk(
     df: DataFrame,
     k: int | Column,
@@ -157,28 +192,9 @@ def per_host_topk(
     salts: int = 1,
     host_col: str = "host",
 ) -> DataFrame:
-    """Top-k rows per host under `order`.
-
-    With salts > 1, a two-phase rank avoids hot-host skew: phase 1 ranks
-    within (host, salt) — salt = pmod(url_hash, salts) spreads one
-    domain over many tasks — keeping ≤ k rows per salt; phase 2 ranks
-    the ≤ salts·k survivors exactly per host. Same result, bounded task
-    size (north rule: a 10^10 frontier must not concentrate on one
-    executor)."""
-    k_col = F.lit(k) if isinstance(k, int) else k
-    if salts > 1:
-        salt = F.pmod(F.coalesce(F.col("url_hash"), F.lit(0)), F.lit(salts))
-        w1 = Window.partitionBy(F.col(host_col), salt).orderBy(*order)
-        df = (
-            df.withColumn("__rn1", F.row_number().over(w1))
-            .filter(F.col("__rn1") <= k_col)
-            .drop("__rn1")
-        )
-    w2 = Window.partitionBy(host_col).orderBy(*order)
-    return (
-        df.withColumn("host_rank", F.row_number().over(w2))
-        .filter(F.col("host_rank") <= k_col)
-    )
+    """Top-k rows per host under `order` (see rank_per_host)."""
+    ranked = rank_per_host(df, k, order, salts, host_col)
+    return ranked.filter(F.col("host_rank") <= k)
 
 
 def take_batch(
@@ -282,9 +298,7 @@ class FrontierScheduler:
             self._queue = df
         else:
             self._queue = self._queue.unionByName(df)
-        new_seen = df.select("url_hash").withColumn(
-            "bucket", F.pmod(F.col("url_hash"), F.lit(32)).cast("int")
-        )
+        new_seen = df.select("url_hash")
         self._seen = (
             new_seen if self._seen is None else self._seen.unionByName(new_seen)
         )

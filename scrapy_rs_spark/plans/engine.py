@@ -41,7 +41,7 @@ from scrapy_rs_spark.operators.fetch import (
 from scrapy_rs_spark.operators.scheduler import (
     apply_enqueue_filters,
     frontier_order,
-    per_host_topk,
+    rank_per_host,
     robots_filter,
     take_batch,
 )
@@ -54,6 +54,13 @@ from scrapy_rs_spark.sources.store import CrawlStore
 
 # effectively-unlimited per-host budget when no politeness delay is set
 _UNLIMITED = 1 << 31
+# hot-host salting of the per-host rank (operators/scheduler.py
+# rank_per_host): a round whose committed frontier exceeds
+# SALT_MIN_FRONTIER rows ranks within (host, pmod(url_hash, HOST_SALTS))
+# first, so no single task holds a whole domain; below it per-host skew
+# is bounded by the threshold itself and one window suffices
+HOST_SALTS = 4
+SALT_MIN_FRONTIER = 1_000_000
 
 
 @dataclass
@@ -394,7 +401,9 @@ class CrawlEngine:
         served: DataFrame | None,
         pages_served_total: int,
         frontier_hint: int = 1 << 62,
-    ) -> dict:
+    ) -> tuple[dict, bool]:
+        """Run and commit round `rnd`; returns its metrics and whether
+        the batch still held a row after the request middlewares."""
         _rdds_before = self._persisted_rdd_ids()
         s = self.settings
         order = frontier_order(s.scheduler_type, s.crawl_strategy)
@@ -426,91 +435,59 @@ class CrawlEngine:
             and s.max_requests_per_domain is None
             and not self._has_host_delays
         )
-        batch = None
+        # page_limit and request middlewares are the only steps that can
+        # drop a politeness-eligible row from the batch
+        shrinks = batch_cap is not None or self.request_middlewares is not None
         leftover = None
         if unlimited:
-            # fast path: no politeness, no cap → no per-host ranking at
-            # all (saves two Window shuffles per round)
-            ranked = allowed
-            if batch_cap is None and self.request_middlewares is None:
-                # the batch takes EVERY eligible row (no cap, no budget,
-                # no middleware that could drop rows) → nothing defers
-                # to the next round; robots-blocked rows are retired by
-                # construction. Skip the frontier-sized anti-join that
-                # would only prove leftover is empty.
-                leftover = ready.limit(0).select(*FRONTIER_COLS)
+            # no politeness, no cap → no per-host rank at all; every
+            # allowed row is eligible, robots-blocked rows are retired
+            eligible = allowed
         else:
             allowed = self._with_budget_inputs(allowed, served)
             budget = self._host_budget_col(served, rnd)
-            # single-window budget path: on a frontier small enough that
-            # per-host skew is bounded by the threshold itself, rank once
-            # per host with the budget as a column and split batch /
-            # leftover from ONE checkpointed rank — saves the salted
-            # second window AND the leftover anti-join per round
-            single = (
-                frontier_hint <= s.salt_min_frontier or s.host_salts <= 1
-            ) and self.request_middlewares is None and batch_cap is None
-            if single:
-                from pyspark.sql.window import Window
+            # ONE rank yields batch and leftover. Salting only pays once
+            # a hot host can outgrow a task: below the threshold the rank
+            # is a single window per host. Lazy checkpoint: materialized
+            # by the round's FIRST action (the counter agg reads batch →
+            # ranked), so rank+cache+count land in one Spark job
+            ranked = rank_per_host(
+                allowed.withColumn("__budget", budget),
+                F.col("__budget"),
+                order,
+                salts=HOST_SALTS if frontier_hint > SALT_MIN_FRONTIER else 1,
+            ).localCheckpoint(eager=False)
+            rank = F.col("host_rank")
+            eligible = ranked.filter(rank <= F.col("__budget"))
+            # over-budget rows (NULL = ruled out by the salted phase 1)
+            # stay queued — INCLUDING delay-gated hosts whose round
+            # budget is 0 (they serve in a later round); only
+            # lifetime-cap-exhausted hosts are retired
+            leftover = ranked.filter(
+                (rank.isNull() | (rank > F.col("__budget")))
+                & (self._cap_left_col() > 0)
+            ).select(*FRONTIER_COLS)
 
-                w = Window.partitionBy("host").orderBy(*order)
-                # lazy checkpoint: materialized by the round's FIRST
-                # action (the counter agg reads batch → ranked_all), so
-                # rank+cache+count land in one Spark job, not two
-                ranked_all = (
-                    allowed.withColumn("__budget", budget)
-                    .withColumn("host_rank", F.row_number().over(w))
-                    .localCheckpoint(eager=False)
-                )
-                batch = (
-                    ranked_all.filter(F.col("host_rank") <= F.col("__budget"))
-                    .select(*FRONTIER_COLS)
-                    .withColumn("batch_rank", F.lit(None).cast("int"))
-                )
-                # over-budget rows stay queued — INCLUDING delay-gated
-                # hosts whose round budget is 0 (they serve in a later
-                # round); only lifetime-cap-exhausted hosts are retired;
-                # robots-blocked rows never entered ranked_all → retired
-                leftover = ranked_all.filter(
-                    (F.col("host_rank") > F.col("__budget"))
-                    & (self._cap_left_col() > 0)
-                ).select(*FRONTIER_COLS)
-            else:
-                ranked = per_host_topk(
-                    allowed.withColumn("__budget", budget),
-                    F.col("__budget"),
-                    order,
-                    salts=s.host_salts,
-                )
-
-        if batch is None:
-            batch = take_batch(ranked, order, batch_cap).select(
-                *FRONTIER_COLS, "batch_rank"
-            )
-            if self.request_middlewares is not None:
-                batch = self.request_middlewares(batch)  # X2
-            # lazy: the counter agg below is the materializing action;
-            # every later consumer reads the cached partitions
-            batch = batch.localCheckpoint(eager=False)  # reused 5× below
-
-        if leftover is None:
-            # rows that were politeness-deferred or over page_limit stay
-            # queued
-            leftover = ready.join(
+        batch = take_batch(eligible, order, batch_cap).select(
+            *FRONTIER_COLS, "batch_rank"
+        )
+        if self.request_middlewares is not None:
+            batch = self.request_middlewares(batch)  # X2
+        if unlimited or shrinks:
+            # a budget-only batch is a filter over the ranked checkpoint;
+            # any other batch is checkpointed here, lazily — the counter
+            # agg below materializes it for every later consumer
+            batch = batch.localCheckpoint(eager=False)
+        if shrinks:
+            # eligible rows that page_limit or a middleware dropped stay
+            # queued; the anti-join is batch-sized, never frontier-sized
+            # when a budget binds
+            dropped = eligible.join(
                 batch.select("url_hash"), "url_hash", "left_anti"
             ).select(*FRONTIER_COLS)
-            if self.robots is not None and s.respect_robots_txt:
-                # robots-blocked rows are retired from the frontier (they
-                # can never become fetchable), else they would loop forever
-                leftover = robots_filter(leftover, self.robots)
-
-            # capped-out hosts: cap_left<=0 rows must also be retired
-            # from leftover (delay gating never retires — cap only)
-            if s.max_requests_per_domain is not None:
-                leftover = self._with_budget_inputs(leftover, served)
-                leftover = leftover.filter(
-                    self._cap_left_col() > 0
-                ).drop("__served", "__host_delay")
+            leftover = (
+                dropped if leftover is None else leftover.unionByName(dropped)
+            )
 
         # ---- fetch (J2) + route ----
         # broadcast-batch fetch when the committed frontier size (an
@@ -550,6 +527,11 @@ class CrawlEngine:
         n_redirect = crow["red"] or 0
         n_retry_in = crow["rty"] or 0
         n_error = crow["err"] or 0
+        # response middlewares run after the fetch, so an empty `fetched`
+        # proves an empty batch only without them
+        queued = n_batch > 0 or (
+            self.response_middlewares is not None and not batch.isEmpty()
+        )
 
         # ---- parse (X1) → items + candidates ----
         # the redirect chain (UDF + union) is skipped when the round saw
@@ -589,11 +571,10 @@ class CrawlEngine:
             else build_retries(fetched.filter(is_retryable(st)), rnd, s)
         )
 
-        next_frontier = (
-            gated.select(*FRONTIER_COLS)
-            .unionByName(leftover.select(*FRONTIER_COLS))
-            .unionByName(candidates)
-        )
+        next_frontier = gated.select(*FRONTIER_COLS)
+        if leftover is not None:
+            next_frontier = next_frontier.unionByName(leftover)
+        next_frontier = next_frontier.unionByName(candidates)
         if retries is not None:
             next_frontier = next_frontier.unionByName(retries)
 
@@ -688,7 +669,7 @@ class CrawlEngine:
             clean=False,
         )
         self._release_round_rdds(_rdds_before)
-        return metrics
+        return metrics, queued
 
     # ---- public API (X7 parity: Engine::run → stats) ----
     def run(
@@ -899,7 +880,7 @@ class CrawlEngine:
             if last_m is not None and "frontier_size" in last_m
             else None
         )
-        # frontier-size hint for the adaptive single-window budget rank
+        # frontier-size hint for the salted-rank choice (HOST_SALTS)
         # AND the fetch-join broadcast gate (exact when metrics carry
         # it; never undercounts either way). Budget paths need a hint
         # to pick the rank shape, so they probe when metrics lack one;
@@ -933,7 +914,7 @@ class CrawlEngine:
             if fr_size == 0 or (fr_size is None and frontier.isEmpty()):
                 break
             committed = rnd + 1
-            m = self._run_round(
+            m, queued = self._run_round(
                 committed, frontier, served, pages_served,
                 frontier_hint=fhint if fhint is not None else 1 << 62,
             )
@@ -963,17 +944,22 @@ class CrawlEngine:
                 self._seen_cache_rounds = set()
             rnd = committed
             if m["requests"] == 0 and m["new_urls"] == 0:
-                # only retry-gated or delay-phase-gated rows remain;
-                # fast-forward the round counter to the earliest round
-                # any row can serve instead of committing empty rounds
-                # (a Crawl-delay-30 host against a 10 s round would
-                # otherwise cost 2 empty commits per fetch)
+                # the round served nothing: fast-forward to the earliest
+                # round a row can serve (a Crawl-delay-30 host against a
+                # 10 s round would otherwise cost 2 empty commits per
+                # fetch). When the batch was empty after the request
+                # middlewares, a row that could serve in rnd was dropped
+                # by one and would be again (rounds are deterministic):
+                # only rows gated past rnd count, and with none the crawl
+                # ends, rows still queued. A batch that a response
+                # middleware emptied proves nothing — every row counts.
                 if not fr_size:
                     break
                 nxt = F.greatest(
                     F.col("retry_not_before_round").cast("bigint"),
-                    F.lit(rnd + 1).cast("bigint"),
+                    F.lit(rnd + 1 if queued else rnd).cast("bigint"),
                 )
+                rows = frontier
                 if self._has_long_delays:
                     # phase-aware fast-forward whenever ANY delay (robots
                     # per-host OR global download/domain delay) exceeds
@@ -981,7 +967,7 @@ class CrawlEngine:
                     # phase-gates; _with_budget_inputs leaves
                     # __host_delay NULL when robots delays are absent so
                     # eff_delay falls back to the global delay
-                    fr2 = self._with_budget_inputs(frontier, None)
+                    rows = self._with_budget_inputs(frontier, None)
                     eff_delay, round_ms, period, phase = (
                         self._delay_schedule_cols("bigint")
                     )
@@ -990,10 +976,12 @@ class CrawlEngine:
                         eff_delay > round_ms,
                         nxt + F.pmod(phase - nxt, period),
                     ).otherwise(nxt)
-                    target = fr2.agg(F.min(nxt)).collect()[0][0]
-                else:
-                    target = frontier.agg(F.min(nxt)).collect()[0][0]
-                if target is not None and target > rnd + 1:
+                target = rows.agg(
+                    F.min(F.when(nxt > rnd, nxt))
+                ).collect()[0][0]
+                if target is None:
+                    break
+                if target > rnd + 1:
                     rnd = int(target) - 1
         from scrapy_rs_spark.plans.signals import (
             ENGINE_STOPPED,

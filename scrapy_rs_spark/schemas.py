@@ -51,11 +51,16 @@ FRONTIER_SCHEMA = T.StructType(
 
 FRONTIER_COLS = FRONTIER_SCHEMA.fieldNames()
 
-# DDL form for readers and empty frames (every column nullable, as file
-# sources read them)
-FRONTIER_DDL = ", ".join(
-    f"{f.name} {f.dataType.simpleString()}" for f in FRONTIER_SCHEMA.fields
-)
+
+def _ddl(schema: T.StructType) -> str:
+    """DDL form for readers and empty frames (every column nullable, as
+    file sources read them)."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in schema.fields
+    )
+
+
+FRONTIER_DDL = _ddl(FRONTIER_SCHEMA)
 
 # pages row ⇔ Response (/root/reference/core/src/response.rs:11-46) shaped to
 # the Common-Crawl-style input_hint: (url, warc_ts, html, text, lang) + status.
@@ -100,10 +105,7 @@ ITEMS_SCHEMA = T.StructType(
     ]
 )
 
-ITEMS_DDL = (
-    "url STRING, item_type STRING, text STRING,"
-    " fields MAP<STRING,STRING>, rnd INT"
-)
+ITEMS_DDL = _ddl(ITEMS_SCHEMA)
 
 # per-host policy ⇔ robots + per-domain config
 # (/root/reference/benchmark/src/mock_server.rs:177-192 robots fixture;
@@ -137,10 +139,14 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("seen_size", T.LongType(), False),
     ]
 )
+METRICS_COLS = METRICS_SCHEMA.fieldNames()
+METRICS_DDL = _ddl(METRICS_SCHEMA)
 
+# seen-set row: identity hash + its on-disk bucket = pmod(url_hash, B)
 SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), False),
         T.StructField("bucket", T.IntegerType(), False),
     ]
 )
+SEEN_DDL = _ddl(SEEN_SCHEMA)

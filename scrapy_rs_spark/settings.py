@@ -43,14 +43,8 @@ class Settings:
     url_deny_pattern: str | None = None
     # spark-side knobs (no reference analogue; scale levers)
     seen_buckets: int = 32  # hash buckets of the seen-set table (1000s at 10^10)
-    host_salts: int = 4  # default salt fan-out for hot hosts
     round_duration_ms: int = 10_000  # politeness budget discretization window
     seen_compact_every: int = 16  # fold seen deltas every N rounds
-    # frontier size below which the per-host budget rank runs as ONE
-    # window (batch + leftover split from a single checkpointed rank, no
-    # anti-join) — skew is bounded by the threshold itself; above it the
-    # salted two-phase rank guards hot hosts
-    salt_min_frontier: int = 1_000_000
     # fetch-join strategy gate: when the committed frontier (an upper
     # bound on the round's batch) is at most this many rows, the fetch
     # restates the batch×pages left join as broadcast(batch)⋈pages +

@@ -174,8 +174,15 @@ def sitemap_seeds(
     # Collapse per URL, not per (url, priority, lastmod): a URL listed
     # in multiple sitemaps with different hints must yield ONE seed row
     # (highest priority / newest lastmod win) — duplicate seed rows
-    # would reach the frontier nondeterministically.
+    # would reach the frontier nondeterministically. "Newest" compares
+    # instants, not strings (W3C datetimes carry timezone offsets); the
+    # winning row's original string is kept. The string breaks ties
+    # between spellings of one instant, and decides alone when no
+    # lastmod parses (a NULL instant sorts lowest).
+    newest = F.max(
+        F.struct(F.try_to_timestamp("lastmod").alias("ts"), "lastmod")
+    )
     return out.groupBy("url").agg(
         F.max("priority").alias("priority"),
-        F.max("lastmod").alias("lastmod"),
+        newest["lastmod"].alias("lastmod"),
     )

@@ -36,6 +36,7 @@ iterative-loop plan would otherwise grow unboundedly.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -43,7 +44,13 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from scrapy_rs_spark.schemas import FRONTIER_DDL
+from scrapy_rs_spark.schemas import (
+    FRONTIER_DDL,
+    ITEMS_DDL,
+    METRICS_COLS,
+    METRICS_DDL,
+    SEEN_DDL,
+)
 
 MANIFEST = "MANIFEST.json"
 
@@ -228,25 +235,14 @@ class CrawlStore:
         rounds = self.committed_rounds()
         if upto_round is not None:
             rounds = [r for r in rounds if r <= upto_round]
-        paths = [
-            self._seen_delta_dir(r) for r in rounds
-        ]
-        paths = [p for p in paths if os.path.isdir(p)]
-        if not paths:
-            return self.spark.createDataFrame(
-                [], "url_hash BIGINT, bucket INT"
-            )
         # one read per delta (each has its own bucket= partition root);
         # a multi-path read would trip partition-discovery conflicts
-        out = None
-        for p in paths:
-            df = (
-                self.spark.read.schema("url_hash BIGINT, bucket INT")
-                .parquet(p)
-                .select("url_hash", "bucket")
-            )
-            out = df if out is None else out.unionByName(df)
-        return out
+        deltas = [
+            d for d in map(self.load_seen_delta, rounds) if d is not None
+        ]
+        if not deltas:
+            return self.spark.createDataFrame([], SEEN_DDL)
+        return functools.reduce(DataFrame.unionByName, deltas)
 
     def seen_delta_rounds(self) -> set[int]:
         """Committed rounds whose seen_delta directory still exists
@@ -265,11 +261,7 @@ class CrawlStore:
         p = self._seen_delta_dir(rnd)
         if not os.path.isdir(p):
             return None
-        return (
-            self.spark.read.schema("url_hash BIGINT, bucket INT")
-            .parquet(p)
-            .select("url_hash", "bucket")
-        )
+        return self.spark.read.schema(SEEN_DDL).parquet(p)
 
     def seen_generation(self) -> int:
         """Monotone counter bumped by every compact_seen. A compaction
@@ -357,8 +349,6 @@ class CrawlStore:
             for r in rounds
             if os.path.isdir(os.path.join(self._round_dir(r), "items"))
         ]
-        from scrapy_rs_spark.schemas import ITEMS_DDL
-
         if not paths:
             return self.spark.createDataFrame([], ITEMS_DDL)
         return self.spark.read.schema(ITEMS_DDL).parquet(*paths)
@@ -366,20 +356,12 @@ class CrawlStore:
     def metrics_df(self) -> DataFrame:
         """crawl_metrics as a DataFrame (A1/A4): per-round counters for
         rate queries — (count - lag(count))/Δround etc."""
-        rows = self.load_metrics()
-        if not rows:
-            return self.spark.createDataFrame(
-                [], "round INT, requests BIGINT, responses BIGINT,"
-                " items BIGINT, errors BIGINT, retries BIGINT,"
-                " new_urls BIGINT, frontier_size BIGINT, seen_size BIGINT"
-            )
-        cols = ["round", "requests", "responses", "items", "errors",
-                "retries", "new_urls", "frontier_size", "seen_size"]
         return self.spark.createDataFrame(
-            [tuple(m.get(c, 0) for c in cols) for m in rows],
-            "round INT, requests BIGINT, responses BIGINT, items BIGINT,"
-            " errors BIGINT, retries BIGINT, new_urls BIGINT,"
-            " frontier_size BIGINT, seen_size BIGINT",
+            [
+                tuple(m.get(c, 0) for c in METRICS_COLS)
+                for m in self.load_metrics()
+            ],
+            METRICS_DDL,
         )
 
     def load_metrics(self) -> list[dict]:

@@ -164,6 +164,26 @@ def test_retry_exhaustion_counts_error(spark, pages, tmp_path):
     assert stats.items == 0
 
 
+
+def test_retry_gated_past_an_empty_round_still_serves(spark, pages, tmp_path):
+    """A 15 s backoff against 10 s rounds gates the retry two rounds
+    out, so the round between serves nothing — the crawl must still
+    run the retry's round rather than end at the empty one."""
+    eng = CrawlEngine(
+        spark,
+        pages,
+        Settings(
+            max_retries=1,
+            retry_backoff_base_ms=15_000,
+            scheduler_type="breadth_first",
+        ),
+        store_path=str(tmp_path / "retry_gated"),
+    )
+    stats = eng.run([f"{BASE_URL}/does-not-exist"])
+    assert [m["requests"] for m in stats.per_round] == [0, 1, 0, 1]
+    assert stats.retries == 1 and stats.errors == 1
+
+
 def test_robots_enforcement(spark, pages, tmp_path):
     robots = mock_site_robots(spark, failure_mode=True)  # Disallow /5 /10 /15
     eng = CrawlEngine(

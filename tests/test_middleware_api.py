@@ -156,3 +156,52 @@ def test_engine_middleware_hooks(spark, tmp_path):
     assert stats.requests == 2
     # pipeline filtered the written items down to /1
     assert {r.url for r in eng.items().collect()} == {"http://a.test/1"}
+
+
+def test_middleware_dropping_every_eligible_row_ends_crawl(spark, tmp_path):
+    """A request middleware that drops the only eligible row leaves a
+    round that serves nothing and finds nothing; rounds are
+    deterministic, so the crawl ends there instead of repeating that
+    round up to max_rounds. The dropped row stays queued (resumable)."""
+    from scrapy_rs_spark.plans.engine import CrawlEngine
+    from scrapy_rs_spark.sources.mocksite import BASE_URL, mock_site_pages
+
+    eng = CrawlEngine(
+        spark,
+        mock_site_pages(spark, page_count=3, links_per_page=2),
+        Settings(scheduler_type="breadth_first"),
+        store_path=str(tmp_path / "deny"),
+        request_middlewares=url_filter(deny="/2$"),
+    )
+    stats = eng.run([f"{BASE_URL}/0"], max_rounds=8)
+    assert stats.requests == 2  # /0, then /1; /2 is dropped
+    assert [m["requests"] for m in stats.per_round] == [0, 1, 1, 0]
+    assert stats.rounds == 3
+    assert [r.url for r in eng.frontier().collect()] == [f"{BASE_URL}/2"]
+
+
+def test_response_middleware_emptying_a_round_keeps_crawling(spark, tmp_path):
+    """A response middleware that drops every response of a polite round
+    leaves that round with no requests and no new URLs, yet over-budget
+    rows are still servable next round — the crawl must go on to serve
+    them rather than end at the emptied round."""
+    from scrapy_rs_spark.plans.engine import CrawlEngine
+    from scrapy_rs_spark.sources.mocksite import BASE_URL, mock_site_pages
+
+    eng = CrawlEngine(
+        spark,
+        mock_site_pages(spark, page_count=5, links_per_page=1),
+        Settings(
+            scheduler_type="breadth_first",
+            domain_delay_ms=5000,
+            round_duration_ms=10_000,  # budget = 2 per host per round
+        ),
+        store_path=str(tmp_path / "resp_drop"),
+        response_middlewares=url_filter(deny="/[01]$"),
+    )
+    stats = eng.run([f"{BASE_URL}/{i}" for i in range(5)], max_rounds=8)
+    # round 1 fetches /0 and /1, whose responses are dropped
+    assert [m["requests"] for m in stats.per_round] == [0, 0, 2, 1]
+    assert {r.url for r in eng.items().collect()} == {
+        f"{BASE_URL}/{i}" for i in (2, 3, 4)
+    }

@@ -199,3 +199,44 @@ def test_deep_nesting_exceeding_hops_is_loud(spark):
     with pytest.warns(RuntimeWarning, match="max_hops"):
         seeds = sitemap_seeds(sm, pages, max_hops=1, on_exhausted="warn")
         assert [r["url"] for r in seeds.collect()] == ["http://site.test/0"]
+
+
+def test_sitemap_seeds_newest_lastmod_across_offsets(spark):
+    """A URL listed twice with lastmods in different timezone offsets
+    keeps the later INSTANT, not the larger string: 23:30-05:00 on the
+    3rd is 04:30Z on the 4th, after 01:00Z on the 4th. Two spellings of
+    one instant resolve by the string, whatever the row order."""
+    c = b"""<urlset>
+  <url><loc>http://site.test/3</loc>
+    <lastmod>2025-01-03T23:30:00-05:00</lastmod></url>
+  <url><loc>http://site.test/5</loc>
+    <lastmod>2025-01-04T01:00:00+00:00</lastmod></url>
+</urlset>"""
+    d = b"""<urlset>
+  <url><loc>http://site.test/3</loc>
+    <lastmod>2025-01-04T01:00:00+00:00</lastmod></url>
+  <url><loc>http://site.test/4</loc><lastmod>yesterday</lastmod></url>
+  <url><loc>http://site.test/5</loc>
+    <lastmod>2025-01-04T01:00:00Z</lastmod></url>
+</urlset>"""
+    robots = (
+        b"Sitemap: http://site.test/sitemap-c.xml\r\n"
+        b"Sitemap: http://site.test/sitemap-d.xml\r\n"
+    )
+    pages = _pages(
+        spark,
+        [
+            ("http://site.test/robots.txt", robots),
+            ("http://site.test/sitemap-c.xml", c),
+            ("http://site.test/sitemap-d.xml", d),
+        ],
+    )
+    sm = robots_sitemaps(
+        pages.filter(F.col("url").endswith("robots.txt"))
+    )
+    got = {r["url"]: r["lastmod"] for r in sitemap_seeds(sm, pages).collect()}
+    assert got == {
+        "http://site.test/3": "2025-01-03T23:30:00-05:00",
+        "http://site.test/4": "yesterday",
+        "http://site.test/5": "2025-01-04T01:00:00Z",
+    }
