@@ -65,56 +65,48 @@ class Spider:
     closed: Callable[[], None] | None = None
 
     def _text_udf(self):
-        if self.text_udf is not None:
-            return self.text_udf
-        if self.parse_text is None:
-            return None
-        fn = self.parse_text
-
-        @pandas_udf(StringType())
-        def _u(html: pd.Series) -> pd.Series:
-            return html.map(lambda b: None if b is None else fn(bytes(b)))
-
-        return _u
+        return _hook_udf(self.text_udf, self.parse_text, StringType(), None)
 
     def _links_udf(self):
-        if self.links_udf is not None:
-            return self.links_udf
-        if self.parse_links is None:
-            return None
-        fn = self.parse_links
-
-        @pandas_udf(ArrayType(StringType()))
-        def _u(html: pd.Series) -> pd.Series:
-            return html.map(lambda b: [] if b is None else fn(bytes(b)))
-
-        return _u
+        return _hook_udf(
+            self.links_udf, self.parse_links, ArrayType(StringType()), []
+        )
 
     def _fields_udf(self):
-        if self.fields_udf is not None:
-            return self.fields_udf
-        if self.parse_fields is None:
-            return None
-        fn = self.parse_fields
+        return _hook_udf(
+            self.fields_udf,
+            self.parse_fields,
+            MapType(StringType(), StringType()),
+            None,
+            _string_map,
+        )
 
-        @pandas_udf(MapType(StringType(), StringType()))
-        def _u(html: pd.Series) -> pd.Series:
-            def conv(b):
-                if b is None:
-                    return None
-                d = fn(bytes(b))
-                if d is None:
-                    return None
-                # DynamicItem values are arbitrary JSON; stringify
-                # non-strings so the columnar map stays STRING→STRING
-                return {
-                    str(k): v if isinstance(v, str) else json.dumps(v)
-                    for k, v in d.items()
-                }
 
-            return html.map(conv)
+def _string_map(d: dict | None) -> dict[str, str] | None:
+    """DynamicItem values are arbitrary JSON; stringify non-strings so
+    the columnar map stays STRING→STRING."""
+    if d is None:
+        return None
+    return {
+        str(k): v if isinstance(v, str) else json.dumps(v)
+        for k, v in d.items()
+    }
 
-        return _u
+
+def _hook_udf(udf, fn, return_type, null, convert=lambda v: v):
+    """A spider hook as an Arrow pandas UDF over html: the ready-made
+    ``udf`` when given, else the per-document ``fn`` (html bytes →
+    value) batch-wrapped, with ``null`` for a NULL body and
+    ``convert`` applied to what ``fn`` returns; None when neither is
+    set."""
+    if udf is not None or fn is None:
+        return udf
+
+    @pandas_udf(return_type)
+    def _u(html: pd.Series) -> pd.Series:
+        return html.map(lambda b: null if b is None else convert(fn(bytes(b))))
+
+    return _u
 
 
 def run_crawl(

@@ -16,10 +16,23 @@ Pinned text algorithm:
 
 Link extraction: every href attribute of <a> tags in document order.
 
-Both are Arrow-batched pandas UDFs (Series→Series). The crawl engine's
-default parse uses parse_resolve_udf instead: text and links from one
-HTML pass, with the links resolved to canonical absolute URLs inside
-the same Python worker call — the only Python on the parse hot path.
+One HTMLParser subclass (_PageExtractor) does both in a single pass;
+parse_page returns (text, hrefs), and extract_text / extract_links are
+its two halves. Link resolution has one helper too (_resolve_links:
+the batch's hrefs flattened through the vectorized resolve_series,
+regrouped per page). UDFs:
+
+  * parse_resolve_udf(html, encoding, base) → struct(text, links): the
+    crawl engine's parse and link_graph's edges — text plus links
+    already canonical, in one Python pass per page
+  * resolve_links_udf(base, hrefs) → links: resolves an href array the
+    extractor did not produce (a spider's links hook, a redirect
+    Location) with the same helper
+  * extract_text_udf / extract_links_udf: html → text / raw hrefs
+
+Resolving inside the UDF that produces the array keeps plans free of
+the explode → urljoin_udf → IS NOT NULL shape, under which Catalyst
+evaluates the UDF twice (once for the filter, once for the projection).
 """
 
 from __future__ import annotations
@@ -36,39 +49,6 @@ from scrapy_rs_spark.functions.url import resolve_series
 _SKIP_TAGS = {"script", "style"}
 
 
-class _TextExtractor(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.chunks: list[str] = []
-        self._skip_depth = 0
-
-    def handle_starttag(self, tag, attrs):
-        if tag in _SKIP_TAGS:
-            self._skip_depth += 1
-
-    def handle_endtag(self, tag):
-        if tag in _SKIP_TAGS and self._skip_depth > 0:
-            self._skip_depth -= 1
-
-    def handle_data(self, data):
-        if self._skip_depth == 0:
-            stripped = data.strip()
-            if stripped:
-                self.chunks.append(stripped)
-
-
-class _LinkExtractor(HTMLParser):
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.links: list[str] = []
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "a":
-            for name, value in attrs:
-                if name == "href" and value:
-                    self.links.append(value)
-
-
 def _decode(html: bytes | str | None, encoding: str | None = None):
     """Strict decode of a response body. encoding overrides the default
     UTF-8 per request (reference Request.encoding, request.rs:74-90 —
@@ -83,47 +63,9 @@ def _decode(html: bytes | str | None, encoding: str | None = None):
         return None
 
 
-def extract_text(html: bytes | str | None, encoding: str | None = None) -> str | None:
-    """Pinned html→text. None on undecodable bytes (strict decode;
-    per-request encoding override honored)."""
-    html = _decode(html, encoding)
-    if html is None:
-        return None
-    p = _TextExtractor()
-    try:
-        p.feed(html)
-        p.close()
-    except Exception:
-        return None
-    return "\n".join(p.chunks)
-
-
-def extract_links(html: bytes | str | None, encoding: str | None = None) -> list[str]:
-    html = _decode(html, encoding)
-    if html is None:
-        return []
-    p = _LinkExtractor()
-    try:
-        p.feed(html)
-        p.close()
-    except Exception:
-        return []
-    return p.links
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text)
-
-
-@pandas_udf(ArrayType(StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_links)
-
-
 class _PageExtractor(HTMLParser):
-    """One pass for BOTH text and links — the engine's parse stage uses
-    this so each page's HTML is parsed once, not twice."""
+    """The one pinned extractor: text chunks and <a href> values in a
+    single pass, so each page's HTML is parsed once."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -153,9 +95,9 @@ class _PageExtractor(HTMLParser):
 def parse_page(
     html: bytes | str | None, encoding: str | None = None
 ) -> tuple[str | None, list[str]]:
-    """Pinned single-pass parse: (text, links). Byte-identical to
-    extract_text/extract_links (same parser callbacks, same order);
-    per-request encoding override honored like the reference."""
+    """Pinned single-pass parse: (text, raw hrefs). Undecodable bytes
+    or a parser error → (None, []); per-request encoding override
+    honored like the reference."""
     html = _decode(html, encoding)
     if html is None:
         return None, []
@@ -166,6 +108,61 @@ def parse_page(
     except Exception:
         return None, []
     return "\n".join(p.chunks), p.links
+
+
+def extract_text(html: bytes | str | None, encoding: str | None = None) -> str | None:
+    """Pinned html→text. None on undecodable bytes (strict decode;
+    per-request encoding override honored)."""
+    return parse_page(html, encoding)[0]
+
+
+def extract_links(html: bytes | str | None, encoding: str | None = None) -> list[str]:
+    """Pinned html→hrefs of <a> tags, in document order, unresolved."""
+    return parse_page(html, encoding)[1]
+
+
+@pandas_udf(StringType())
+def extract_text_udf(html: pd.Series) -> pd.Series:
+    return html.map(extract_text)
+
+
+@pandas_udf(ArrayType(StringType()))
+def extract_links_udf(html: pd.Series) -> pd.Series:
+    return html.map(extract_links)
+
+
+def _resolve_links(base: pd.Series, hrefs: list[list[str]]) -> list[list[str]]:
+    """Resolve each row's hrefs against its base: the batch's hrefs are
+    flattened into ONE call of the vectorized resolve_series (the
+    kernel urljoin_udf wraps), then regrouped per row. Canonical URLs,
+    unresolvable hrefs dropped, document order kept."""
+    counts = [len(h) for h in hrefs]
+    flat = [href for h in hrefs for href in h]
+    resolved = (
+        resolve_series(
+            pd.Series(np.repeat(base.to_numpy(dtype=object), counts)),
+            pd.Series(flat, dtype="object"),
+        ).tolist()
+        if flat
+        else []
+    )
+    out, pos = [], 0
+    for n in counts:
+        out.append([u for u in resolved[pos : pos + n] if u is not None])
+        pos += n
+    return out
+
+
+@pandas_udf(ArrayType(StringType()))
+def resolve_links_udf(base: pd.Series, hrefs: pd.Series) -> pd.Series:
+    """ARRAY<STRING> of hrefs → canonical absolute URLs against
+    ``base``, unresolvable or NULL hrefs dropped, order kept (a NULL
+    array → []). The engine runs a links hook's output and redirect
+    Locations through it, so no plan filters on a UDF's NULLs."""
+    return pd.Series(
+        _resolve_links(base, [[] if h is None else list(h) for h in hrefs]),
+        index=hrefs.index,
+    )
 
 
 _PAGE_STRUCT = StructType(
@@ -187,9 +184,7 @@ def parse_resolve_udf(
     (frontier column; NULL → strict UTF-8, request.rs:74-90).
 
     Byte-identical to parse_page → explode → urljoin_udf → drop NULL:
-    each batch's hrefs are flattened and resolved by the same
-    vectorized resolve_series urljoin_udf wraps, then regrouped per
-    page."""
+    the hrefs go through _resolve_links, as in resolve_links_udf."""
     if encoding.isna().all():
         parsed = [parse_page(h) for h in html]
     else:
@@ -197,18 +192,9 @@ def parse_resolve_udf(
             parse_page(h, e if isinstance(e, str) and e else None)
             for h, e in zip(html, encoding)
         ]
-    counts = [len(links) for _, links in parsed]
-    hrefs = [href for _, links in parsed for href in links]
-    resolved = (
-        resolve_series(
-            pd.Series(np.repeat(base.to_numpy(dtype=object), counts)),
-            pd.Series(hrefs, dtype="object"),
-        ).tolist()
-        if hrefs
-        else []
+    return pd.DataFrame(
+        {
+            "text": [t for t, _ in parsed],
+            "links": _resolve_links(base, [links for _, links in parsed]),
+        }
     )
-    links, pos = [], 0
-    for n in counts:
-        links.append([u for u in resolved[pos : pos + n] if u is not None])
-        pos += n
-    return pd.DataFrame({"text": [t for t, _ in parsed], "links": links})

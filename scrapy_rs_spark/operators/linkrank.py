@@ -5,8 +5,9 @@ backlink counts and PageRank-family scores, the OPIC/BFS+backlink
 orderings of the crawl-ordering literature).
 
 Two operators over a link-edge table (src, dst) — built from crawled
-pages with ``link_graph`` (the same single-pass extractor the parse
-stage uses, plus the C2 urljoin kernel):
+pages with ``link_graph``, which runs the crawl engine's own parse UDF
+(the single-pass extractor with the C2 urljoin kernel fused in, so
+each page is parsed and its hrefs resolved in one Python call):
 
 * ``backlink_priority`` — exact in-degree per target. One partial
   aggregation on dst; integer contract, driver-hash-gated
@@ -37,24 +38,22 @@ def link_graph(
     url_col: str = "url",
     html_col: str = "html",
 ) -> DataFrame:
-    """(src, dst) edges from crawled pages: extractor UDF pulls hrefs,
-    the urljoin kernel absolutizes them against the page URL. Distinct
-    edges (a page linking twice votes once, the link-analysis
-    convention)."""
-    from scrapy_rs_spark.functions.text import extract_links_udf
-    from scrapy_rs_spark.functions.url import urljoin_udf
+    """(src, dst) edges from crawled pages: the engine's parse UDF
+    (parse_resolve_udf, strict UTF-8) extracts each page's hrefs and
+    resolves them against the page URL in one Python pass, so the plan
+    holds one Python node and no filter over a UDF. Unresolvable hrefs
+    yield no edge. Distinct edges (a page linking twice votes once,
+    the link-analysis convention)."""
+    from scrapy_rs_spark.functions.text import parse_resolve_udf
 
-    hrefs = pages.select(
+    return pages.select(
         F.col(url_col).alias("src"),
-        F.explode(extract_links_udf(F.col(html_col))).alias("__href"),
-    )
-    return (
-        hrefs.select(
-            "src", urljoin_udf(F.col("src"), F.col("__href")).alias("dst")
-        )
-        .filter(F.col("dst").isNotNull())
-        .distinct()
-    )
+        F.explode(
+            parse_resolve_udf(
+                F.col(html_col), F.lit(None).cast("string"), F.col(url_col)
+            ).links
+        ).alias("dst"),
+    ).distinct()
 
 
 def backlink_priority(edges: DataFrame) -> DataFrame:

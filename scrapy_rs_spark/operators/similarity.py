@@ -226,24 +226,6 @@ def ivf_assign(
     return vectors.withColumn("centroid_id", _assign(F.col(vec_col)))
 
 
-def deterministic_centroids(
-    vectors: DataFrame,
-    k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Deterministic coarse centroids: the k lowest-id vectors (a real
-    system runs k-means; the IVF *plumbing* — assignment, inverted
-    lists, probe — is identical and that's what scales)."""
-    rows = (
-        vectors.orderBy(F.col(id_col).asc())
-        .limit(k)
-        .select(id_col, vec_col)
-        .collect()
-    )
-    return [(i, [float(x) for x in r[vec_col]]) for i, r in enumerate(rows)]
-
-
 def kmeans_centroids(
     vectors: DataFrame,
     k: int = 8,

@@ -61,6 +61,17 @@ _UNLIMITED = 1 << 31
 # is bounded by the threshold itself and one window suffices
 HOST_SALTS = 4
 SALT_MIN_FRONTIER = 1_000_000
+# fetch-join strategy gate: when the committed frontier (an upper
+# bound on the round's batch) is at most this many rows, the fetch
+# restates the batch×pages left join as broadcast(batch)⋈pages + a
+# key-only anti-join, so the pages side's html payload is scanned in
+# place and never crosses an Exchange (guide §3.1: pick the join
+# strategy deliberately; §2.3: shuffle keys, not payloads). Above the
+# gate the plain left join (sort-merge) stands. Size to the
+# executor/driver broadcast budget on a cluster (rows × ~250 B must fit
+# comfortably under the 8 GB broadcast cap); this keeps broadcasts
+# ≤ ~125 MB.
+FETCH_BROADCAST_MAX_BATCH = 500_000
 
 
 @dataclass
@@ -496,7 +507,7 @@ class CrawlEngine:
         # place instead of sort-merge-shuffled every round. Strict
         # pacing keeps the join shape that streams the paced rows.
         broadcast = (
-            frontier_hint <= s.fetch_broadcast_max_batch
+            frontier_hint <= FETCH_BROADCAST_MAX_BATCH
             and not s.strict_delay
         )
         fetched = fetch_round(

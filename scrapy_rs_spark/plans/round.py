@@ -18,12 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from scrapy_rs_spark.functions.text import (
-    extract_links_udf,
-    extract_text_udf,
-    parse_resolve_udf,
-)
-from scrapy_rs_spark.functions.url import url_hash_expr, urljoin_udf
+from scrapy_rs_spark.functions.text import parse_resolve_udf, resolve_links_udf
+from scrapy_rs_spark.functions.url import url_hash_expr
 from scrapy_rs_spark.operators.dedup import dedup_in_batch
 from scrapy_rs_spark.operators.fetch import (
     fetch_join,
@@ -121,8 +117,9 @@ def expand_round(
     redirects (when follow_redirects), enqueue-filtered and deduplicated
     within the round, not yet checked against the seen set.
 
-    broadcast_batch is the fetch join's shape; with no parse hooks the
-    default extractors run fused in one UDF per page."""
+    broadcast_batch is the fetch join's shape. parse_text_udf /
+    parse_links_udf / parse_fields_udf (html → text / raw hrefs / field
+    map) each replace one column of the default parse."""
     s = settings
     success = fetched.filter(is_success(F.col("status")))
     if not broadcast_batch:
@@ -135,17 +132,20 @@ def expand_round(
         success = success.repartition(
             fetched.sparkSession.sparkContext.defaultParallelism
         )
-    # optional transport metadata (response.rs:35-45) projected by
-    # fetch_join when the pages table carries it — surfaced to item
-    # pipelines through the items.fields map (response middlewares
-    # already see the raw columns on the fetched frame)
+    # items.fields: a custom parse_fields_udf owns the map; otherwise
+    # the optional transport metadata (response.rs:35-45) projected by
+    # fetch_join, when the pages table carries it, rides there for
+    # item pipelines (response middlewares already see the raw columns
+    # on the fetched frame)
     transport = [
         c
         for c in ("certificate", "ip_address", "protocol")
         if c in fetched.columns
     ]
-    if transport:
-        transport_fields = F.map_filter(
+    if parse_fields_udf is not None:
+        fields = parse_fields_udf(F.col("html"))
+    elif transport:
+        fields = F.map_filter(
             F.map_from_arrays(
                 F.array(*[F.lit(c) for c in transport]),
                 F.array(*[F.col(c).cast("string") for c in transport]),
@@ -153,73 +153,56 @@ def expand_round(
             lambda _, v: v.isNotNull(),
         )
     else:
-        transport_fields = F.lit(None).cast("map<string,string>")
-    if (
-        parse_text_udf is None
-        and parse_links_udf is None
-        and parse_fields_udf is None
-    ):
-        # single-pass parse: text + RESOLVED links in ONE UDF over
-        # each page, materialized once (html dropped immediately
-        # after) — the items write and the link expansion both read
-        # the result. Link resolution is fused into the parse UDF on
-        # purpose: a separate urljoin_udf over the exploded links is
-        # extracted by Catalyst twice (once for the `url IS NOT NULL`
-        # filter, once for the projection), so every link would
-        # cross into Python two more times per round.
-        parsed = success.select(
-            "url",
-            "depth",
-            "cookies",
-            transport_fields.alias("__tf"),
-            # per-request decode override (request.rs:74-90):
-            # encoding NULL → strict UTF-8, like the reference
+        fields = F.lit(None).cast("map<string,string>")
+    # ONE parse select, materialized once (html dropped immediately
+    # after): the items write materializes it and the link expansion
+    # reads the cached result. The fused extractor yields text + links
+    # RESOLVED in one UDF pass per page; a hook replaces just its own
+    # column, and parse_resolve_udf runs only while a default column is
+    # still needed. Links are resolved inside the UDF that yields the
+    # array on purpose: a urljoin_udf over the exploded links would be
+    # extracted by Catalyst twice (once for a `url IS NOT NULL` filter,
+    # once for the projection), so every link would cross into Python
+    # two more times per round.
+    cols = [
+        F.col("url"),
+        F.col("depth"),
+        F.col("cookies"),
+        fields.alias("__tf"),
+    ]
+    if parse_text_udf is None or parse_links_udf is None:
+        # per-request decode override (request.rs:74-90): encoding
+        # NULL → strict UTF-8, like the reference
+        cols.append(
             parse_resolve_udf(
                 F.col("html"), F.col("encoding"), F.col("url_canon")
-            ).alias("p"),
-            # lazy: the items write materializes the parse; the link
-            # expansion then reads the cached result
-        ).localCheckpoint(eager=False)
-        items = parsed.select(
-            F.col("url"),
-            F.lit("extracted_text").alias("item_type"),
-            F.col("p.text").alias("text"),
-            F.col("__tf").alias("fields"),
-            F.lit(rnd).alias("rnd"),
+            ).alias("p")
         )
-        # links arrive canonical with unresolvable hrefs dropped
-        links = parsed.select(
-            F.col("depth").alias("parent_depth"),
-            F.col("cookies").alias("parent_cookies"),
-            F.explode(F.col("p.links")).alias("url"),
+    text, links_col = F.col("p.text"), F.col("p.links")
+    if parse_text_udf is not None:
+        cols.append(parse_text_udf(F.col("html")).alias("__text"))
+        text = F.col("__text")
+    if parse_links_udf is not None:
+        # the hook yields raw hrefs: resolve them as the fused parse does
+        cols.append(
+            resolve_links_udf(
+                F.col("url_canon"), parse_links_udf(F.col("html"))
+            ).alias("__links")
         )
-    else:
-        # a custom parse_fields_udf owns the fields map; otherwise
-        # transport metadata (when present) rides there
-        fields_col = (
-            parse_fields_udf(F.col("html"))
-            if parse_fields_udf is not None
-            else transport_fields
-        )
-        items = success.select(
-            F.col("url"),
-            F.lit("extracted_text").alias("item_type"),
-            (parse_text_udf or extract_text_udf)(F.col("html")).alias("text"),
-            fields_col.alias("fields"),
-            F.lit(rnd).alias("rnd"),
-        )
-        links = (
-            success.select(
-                F.col("url_canon").alias("base"),
-                F.col("depth").alias("parent_depth"),
-                F.col("cookies").alias("parent_cookies"),
-                F.explode(
-                    (parse_links_udf or extract_links_udf)(F.col("html"))
-                ).alias("href"),
-            )
-            .withColumn("url", urljoin_udf(F.col("base"), F.col("href")))
-            .filter(F.col("url").isNotNull())
-        )
+        links_col = F.col("__links")
+    parsed = success.select(*cols).localCheckpoint(eager=False)
+    items = parsed.select(
+        F.col("url"),
+        F.lit("extracted_text").alias("item_type"),
+        text.alias("text"),
+        F.col("__tf").alias("fields"),
+        F.lit(rnd).alias("rnd"),
+    )
+    links = parsed.select(
+        F.col("depth").alias("parent_depth"),
+        F.col("cookies").alias("parent_cookies"),
+        F.explode(links_col).alias("url"),
+    )
     # invalid-UTF-8 / unparsable pages yield text NULL → routed to
     # the error channel (functions/text.py contract), never written
     # as items. Counts come free from an observation on the items
@@ -257,9 +240,12 @@ def expand_round(
         redirs = (
             fetched.filter(is_redirect(F.col("status")))
             .select(
-                urljoin_udf(
-                    F.col("url_canon"),
-                    F.element_at(F.col("headers"), "location"),
+                # an unresolvable or missing Location yields no row
+                F.explode(
+                    resolve_links_udf(
+                        F.col("url_canon"),
+                        F.array(F.element_at(F.col("headers"), "location")),
+                    )
                 ).alias("url"),
                 "depth",
                 "priority",
@@ -269,10 +255,7 @@ def expand_round(
                 "flags",
                 hops.alias("hops"),
             )
-            .filter(
-                F.col("url").isNotNull()
-                & (F.col("hops") <= F.lit(s.max_redirects))
-            )
+            .filter(F.col("hops") <= F.lit(s.max_redirects))
         )
         candidates = candidates.unionByName(
             _requests(

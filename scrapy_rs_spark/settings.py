@@ -45,17 +45,6 @@ class Settings:
     seen_buckets: int = 32  # hash buckets of the seen-set table (1000s at 10^10)
     round_duration_ms: int = 10_000  # politeness budget discretization window
     seen_compact_every: int = 16  # fold seen deltas every N rounds
-    # fetch-join strategy gate: when the committed frontier (an upper
-    # bound on the round's batch) is at most this many rows, the fetch
-    # restates the batch×pages left join as broadcast(batch)⋈pages +
-    # a key-only anti-join, so the pages side's html payload is
-    # scanned in place and never crosses an Exchange (guide §3.1: pick
-    # the join strategy deliberately; §2.3: shuffle keys, not
-    # payloads). Above the gate the plain left join (sort-merge)
-    # stands. Size to executor/driver broadcast budget on a cluster
-    # (rows × ~250 B must fit comfortably under the 8 GB broadcast
-    # cap); the default keeps broadcasts ≤ ~125 MB.
-    fetch_broadcast_max_batch: int = 500_000
     # close-lifecycle bound (engine/src/lib.rs:1285-1420: the reference
     # wraps each spider/pipeline/middleware close hook in a 5 s timeout
     # so a hanging hook cannot hang crawl exit)

@@ -32,6 +32,15 @@ def test_settings_from_reference_keys(tmp_path):
     assert s.url_deny_pattern == "/admin/"
 
 
+def test_settings_ignore_removed_keys():
+    """A settings dict written for an older release still loads: a key
+    that is no longer a field (the fetch broadcast gate, now the
+    engine constant FETCH_BROADCAST_MAX_BATCH) is ignored."""
+    s = Settings.from_dict({"fetch_broadcast_max_batch": 7, "MAX_DEPTH": 2})
+    assert s.max_depth == 2
+    assert not hasattr(s, "fetch_broadcast_max_batch")
+
+
 def test_cli_crawl(spark, tmp_path):
     """Drive `python -m scrapy_rs_spark crawl` end-to-end in a
     subprocess (the real CLI surface, fresh interpreter)."""

@@ -61,3 +61,14 @@ def test_link_graph_from_mocksite(spark):
     assert got == {
         f"http://mocksite.test/{i}": links for i in range(n)
     }
+
+
+def test_link_graph_runs_one_python_node(spark):
+    """link_graph resolves inside the parse UDF: its plan evaluates one
+    Python UDF once and filters on no UDF output."""
+    from scrapy_rs_spark.sources.mocksite import mock_site_pages
+    from test_round_kernel import python_evals
+
+    pages = mock_site_pages(spark, page_count=6, links_per_page=2,
+                            golden_text=False)
+    assert python_evals(link_graph(pages)) == {"parse_resolve_udf": 1}

@@ -158,6 +158,45 @@ def test_engine_middleware_hooks(spark, tmp_path):
     assert {r.url for r in eng.items().collect()} == {"http://a.test/1"}
 
 
+def test_fields_hook_keeps_per_request_encoding(spark, tmp_path):
+    """A parse_fields hook replaces only the fields map: the shift-jis
+    seed still decodes through its per-request encoding, so its text
+    and its link to a UTF-8 page match the no-hook crawl."""
+    from scrapy_rs_spark.plans.engine import CrawlEngine
+
+    sjis = "<html><body>こんにちは<a href='http://u.test/b'>b</a></body></html>"
+    pages = spark.createDataFrame(
+        [
+            ("http://jp.test/a", 200, bytearray(sjis.encode("shift_jis"))),
+            ("http://u.test/b", 200, bytearray(b"<html><body>utf</body></html>")),
+        ],
+        "url STRING, status INT, html BINARY",
+    ).withColumn("headers", F.lit(None).cast("map<string,string>"))
+    seed = {"url": "http://jp.test/a", "encoding": "shift_jis"}
+    crawled = {}
+    for name, hook in (("plain", None), ("fields", lambda b: {"n": len(b)})):
+        spider = Spider(name, parse_fields=hook)
+        eng = CrawlEngine(
+            spark,
+            pages,
+            Settings(respect_robots_txt=False),
+            store_path=str(tmp_path / name),
+            parse_fields_udf=spider._fields_udf(),
+        )
+        stats = eng.run([seed])
+        assert (stats.requests, stats.items, stats.errors) == (2, 2, 0)
+        crawled[name] = {
+            r.url: (r.text, r.fields) for r in eng.items().collect()
+        }
+    texts = {u: t for u, (t, _) in crawled["plain"].items()}
+    assert texts["http://jp.test/a"] == "こんにちは\nb"
+    assert {u: t for u, (t, _) in crawled["fields"].items()} == texts
+    assert {u: f for u, (_, f) in crawled["fields"].items()} == {
+        "http://jp.test/a": {"n": str(len(sjis.encode("shift_jis")))},
+        "http://u.test/b": {"n": "29"},
+    }
+
+
 def test_middleware_dropping_every_eligible_row_ends_crawl(spark, tmp_path):
     """A request middleware that drops the only eligible row leaves a
     round that serves nothing and finds nothing; rounds are

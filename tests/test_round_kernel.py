@@ -1,10 +1,20 @@
 """The round kernel (plans/round.py) shared by CrawlEngine rounds and
 StreamingCrawl micro-batches: both crawls agree on a corpus with a
-redirect and an undecodable page, and neither probes partition counts."""
+redirect and an undecodable page, neither probes partition counts, and
+no plan the kernel builds evaluates a Python UDF twice."""
 
+import re
+from collections import Counter
+
+import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, StringType
 
+import scrapy_rs_spark.plans.engine as engine_mod
+from scrapy_rs_spark.functions.text import extract_links
 from scrapy_rs_spark.plans.engine import CrawlEngine
 from scrapy_rs_spark.schemas import FRONTIER_DDL
 from scrapy_rs_spark.settings import Settings
@@ -88,3 +98,88 @@ def test_round_path_never_probes_partitions(spark, tmp_path, monkeypatch):
     )
     assert sc.items().count() == 1
     assert touched == []
+
+
+# ---- no Python UDF evaluated twice in one plan ----
+
+_UDF_NAMES = (
+    "parse_resolve_udf",
+    "resolve_links_udf",
+    "urljoin_udf",
+    "links_hook",
+    "text_hook",
+)
+
+
+def python_evals(df) -> Counter:
+    """Python UDF name → number of ArrowEvalPython nodes evaluating it
+    in df's executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = Counter()
+    for line in plan.splitlines():
+        if "ArrowEvalPython" in line:
+            udfs = line.split("ArrowEvalPython", 1)[1].split("], [")[0]
+            nodes.update(
+                n for n in _UDF_NAMES if re.search(rf"\b{n}\(", udfs)
+            )
+    return nodes
+
+
+@pandas_udf(ArrayType(StringType()))
+def links_hook(html: pd.Series) -> pd.Series:
+    return html.map(extract_links)
+
+
+@pandas_udf(StringType())
+def text_hook(html: pd.Series) -> pd.Series:
+    return html.map(lambda b: bytes(b).decode("utf-8", "replace"))
+
+
+@pytest.mark.parametrize(
+    "hooks",
+    [{}, {"parse_links_udf": links_hook},
+     {"parse_links_udf": links_hook, "parse_text_udf": text_hook}],
+    ids=["no_hooks", "links_hook", "text_and_links_hooks"],
+)
+def test_expand_round_evaluates_each_udf_once(
+    spark, tmp_path, monkeypatch, hooks
+):
+    """Every plan expand_round builds on a crawl with a 301 row (its
+    parse checkpoint and its candidates) runs each Python UDF in at
+    most one ArrowEvalPython node; with both the text and the links
+    hook set the default extractor does not run at all."""
+    real_expand = engine_mod.expand_round
+    real_ckpt = ClassicDataFrame.localCheckpoint
+    evals = []
+
+    def ckpt(df, *args, **kwargs):
+        evals.append(python_evals(df))
+        return real_ckpt(df, *args, **kwargs)
+
+    def expand(*args, **kwargs):
+        monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", ckpt)
+        try:
+            items, items_raw, candidates = real_expand(*args, **kwargs)
+        finally:
+            monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", real_ckpt)
+        evals.append(python_evals(candidates))
+        return items, items_raw, candidates
+
+    monkeypatch.setattr(engine_mod, "expand_round", expand)
+    eng = CrawlEngine(
+        spark,
+        _pages(spark),
+        Settings(scheduler_type="breadth_first"),
+        store_path=str(tmp_path / "store"),
+        **hooks,
+    )
+    stats = eng.run(["http://a.test/0"])
+    assert stats.requests == 7
+    assert stats.items == (6 if "parse_text_udf" in hooks else 5)
+    for nodes in evals:
+        assert all(n <= 1 for n in nodes.values()), nodes
+    total = sum(evals, Counter())
+    assert total["resolve_links_udf"] > 0  # the redirect leg was planned
+    assert (total["links_hook"] > 0) == ("parse_links_udf" in hooks)
+    assert (total["text_hook"] > 0) == ("parse_text_udf" in hooks)
+    assert (total["parse_resolve_udf"] == 0) == (len(hooks) == 2)
