@@ -237,7 +237,7 @@ def _seen_probe(
     }
     root = tempfile.mkdtemp(prefix="bench_probe_plain_")
     try:
-        st = CrawlStore(spark, root, seen_buckets=32)
+        st = CrawlStore(spark, root)
         tiny = spark.range(1).select(F.lit("http://x.test/").alias("url"))
         base = spark.range(base_rows).select(
             F.xxhash64("id").alias("url_hash")

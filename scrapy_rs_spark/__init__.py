@@ -4,7 +4,7 @@ A brand-new, Spark-first reimplementation of the capabilities of the
 zeliu/scrapy-rs reference crawler (see /root/reference, SURVEY.md):
 
 * distributed URL frontier over per-round committed tables (Iceberg in
-  production, bucket-partitioned parquet in this sandbox — see
+  production, plain parquet in this sandbox — see
   ``sources.store``),
 * URL canonicalization + 64-bit hashing feeding a partitioned seen-set
   probed by left-anti join,

@@ -135,9 +135,10 @@ def _resolve_links(base: pd.Series, hrefs: list[list[str]]) -> list[list[str]]:
     """Resolve each row's hrefs against its base: the batch's hrefs are
     flattened into ONE call of the vectorized resolve_series (the
     kernel urljoin_udf wraps), then regrouped per row. Canonical URLs,
-    unresolvable hrefs dropped, document order kept."""
-    counts = [len(h) for h in hrefs]
-    flat = [href for h in hrefs for href in h]
+    unresolvable hrefs dropped, document order kept. A NULL base gives
+    [] without resolving its row's hrefs."""
+    counts = [0 if na else len(h) for na, h in zip(base.isna(), hrefs)]
+    flat = [href for n, h in zip(counts, hrefs) if n for href in h]
     resolved = (
         resolve_series(
             pd.Series(np.repeat(base.to_numpy(dtype=object), counts)),
@@ -181,7 +182,9 @@ def parse_resolve_udf(
     outgoing links already resolved against ``base`` (the page's
     url_canon) and canonicalized, unresolvable hrefs dropped, document
     order kept. ``encoding`` is the per-request decode override
-    (frontier column; NULL → strict UTF-8, request.rs:74-90).
+    (frontier column; NULL → strict UTF-8, request.rs:74-90). A NULL
+    ``base`` yields links [] unresolved: the engine passes one when a
+    links hook owns the links column.
 
     Byte-identical to parse_page → explode → urljoin_udf → drop NULL:
     the hrefs go through _resolve_links, as in resolve_links_udf."""

@@ -11,12 +11,11 @@ Set-at-a-time restatement:
     discovery_seq, url) == 1 (north-rule total order; the reference's
     in-heap tie order is unspecified)
   * cross-batch dedup: LEFT ANTI hash join against the seen set on
-    url_hash alone (the store's pmod(url_hash, B) bucket column is an
-    on-disk layout, not a join key). In production the seen set is an
-    Iceberg table with a bucket(url_hash) transform, where a
-    storage-partitioned join keeps the 10^10-row seen side from being
-    re-shuffled; here the planner picks a broadcast or a shuffled
-    anti-join
+    url_hash (the store's seen deltas hold nothing else). In
+    production the seen set is an Iceberg table with a bucket(url_hash)
+    transform, where a storage-partitioned join keeps the 10^10-row
+    seen side from being re-shuffled; here the planner picks a
+    broadcast or a shuffled anti-join
 """
 
 from __future__ import annotations
@@ -68,9 +67,11 @@ def dedup_in_batch(candidates: DataFrame, key: str = "url_hash") -> DataFrame:
     """Keep one deterministic winner per identity within a batch.
 
     min_by over a lexicographic order-key struct, not a window rank:
-    a hash aggregate combines map-side, so a link explosion with heavy
+    the aggregate combines map-side, so a link explosion with heavy
     duplication (10 links/page crawls re-discover most URLs every
-    round) shrinks ~10× BEFORE the shuffle, and no per-group sort runs.
+    round) shrinks ~10× BEFORE the shuffle. It is not a hash
+    aggregate: min_by over a struct with string fields plans as a
+    partial and a final SortAggregate, each behind a Sort on the key.
     The order key is winner_order_struct() — the same total order as
     the rank formulation (rows tying on the full key are duplicates in
     all order-relevant fields, either formulation picks one)."""

@@ -163,9 +163,7 @@ class CrawlEngine:
         self.spider_close_hook = spider_close_hook
         self.close_errors: list[dict] = []
         self.store = CrawlStore(
-            spark,
-            store_path or tempfile.mkdtemp(prefix="crawlstore_"),
-            seen_buckets=self.settings.seen_buckets,
+            spark, store_path or tempfile.mkdtemp(prefix="crawlstore_")
         )
         # cooperative pause/stop gates, checked at round boundaries —
         # the set-model restatement of the reference's Notify gates
@@ -178,11 +176,11 @@ class CrawlEngine:
         self._stop_requested = False
         self._resume_event = threading.Event()
         # incrementally-extended seen DataFrame: store.load_seen()
-        # re-lists EVERY delta directory (partition discovery included)
-        # on each call — measured ~1.5 s/round of pure driver time on a
-        # politeness crawl. The cache unions only NEW rounds' deltas
-        # onto the existing DataFrame (whose file indexes Spark already
-        # holds) and rebuilds after compaction prunes cached paths.
+        # builds one file index per delta directory on each call, so
+        # every committed delta is re-listed every round. The cache
+        # unions only NEW rounds' deltas onto the existing DataFrame
+        # (whose file indexes Spark already holds) and rebuilds after
+        # compaction prunes cached paths.
         self._seen_df_cache: DataFrame | None = None
         self._seen_cache_rounds: set[int] = set()
         # running seen-set size (cumulative seen-delta rows) for the

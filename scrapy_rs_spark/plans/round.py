@@ -172,11 +172,17 @@ def expand_round(
     ]
     if parse_text_udf is None or parse_links_udf is None:
         # per-request decode override (request.rs:74-90): encoding
-        # NULL → strict UTF-8, like the reference
+        # NULL → strict UTF-8, like the reference. A links hook owns
+        # the links column: a NULL base skips resolving the defaults.
+        base = (
+            F.col("url_canon")
+            if parse_links_udf is None
+            else F.lit(None).cast("string")
+        )
         cols.append(
-            parse_resolve_udf(
-                F.col("html"), F.col("encoding"), F.col("url_canon")
-            ).alias("p")
+            parse_resolve_udf(F.col("html"), F.col("encoding"), base).alias(
+                "p"
+            )
         )
     text, links_col = F.col("p.text"), F.col("p.links")
     if parse_text_udf is not None:

@@ -142,11 +142,6 @@ METRICS_SCHEMA = T.StructType(
 METRICS_COLS = METRICS_SCHEMA.fieldNames()
 METRICS_DDL = _ddl(METRICS_SCHEMA)
 
-# seen-set row: identity hash + its on-disk bucket = pmod(url_hash, B)
-SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-    ]
-)
+# seen-set row: the identity hash alone
+SEEN_SCHEMA = T.StructType([T.StructField("url_hash", T.LongType(), False)])
 SEEN_DDL = _ddl(SEEN_SCHEMA)

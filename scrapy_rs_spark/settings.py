@@ -42,7 +42,6 @@ class Settings:
     url_allow_pattern: str | None = None
     url_deny_pattern: str | None = None
     # spark-side knobs (no reference analogue; scale levers)
-    seen_buckets: int = 32  # hash buckets of the seen-set table (1000s at 10^10)
     round_duration_ms: int = 10_000  # politeness budget discretization window
     seen_compact_every: int = 16  # fold seen deltas every N rounds
     # close-lifecycle bound (engine/src/lib.rs:1285-1420: the reference

@@ -3,10 +3,10 @@
 Production design is Iceberg (ACID commits, bucket(url_hash) partition
 transform, storage-partitioned joins so the 10^10-row seen set is never
 re-shuffled). This sandbox has no Iceberg runtime jar, so the store is
-parquet directories with the same layout discipline:
+plain parquet directories:
 
     root/rounds/round=NNNNNN/frontier/        (parquet)
-    root/rounds/round=NNNNNN/seen_delta/      (parquet, partitioned by bucket)
+    root/rounds/round=NNNNNN/seen_delta/      (parquet, url_hash only)
     root/rounds/round=NNNNNN/items/           (parquet)
     root/rounds/round=NNNNNN/host_served/     (parquet)
     root/rounds/round=NNNNNN/metrics.json     (counters)
@@ -18,17 +18,18 @@ an Iceberg snapshot commit; resume reads the max committed round
 (reference analogue: EngineState save/load,
 /root/reference/engine/src/lib.rs:1196-1252).
 
-Seen-set = union of seen_delta across committed rounds, partitioned on
-disk by ``pmod(url_hash, seen_buckets)``. The engine's anti-join keys
-on url_hash alone, so membership never depends on the bucket count and
-a store may be reopened with a different ``seen_buckets``. Deltas keep commits O(new urls), not
-O(total seen); `compact_seen` folds deltas when they pile up. The fold
-is tiered so its cost also tracks the new URLs: when the deltas other
-than the largest hold fewer bytes than the largest, only those small
-deltas are folded and the large base delta is left as it is; otherwise
-everything is folded. Delta writes and folds use
-``min(seen_buckets, defaultParallelism)`` writer tasks, one file per
-bucket.
+Seen-set = union of seen_delta across committed rounds. A delta holds
+url_hash only, written from its input's partitions as they are (no
+shuffle); the engine's anti-join keys on url_hash alone, so no on-disk
+partitioning would be read. Deltas written with the older ``bucket=``
+partition directories still load: reads project url_hash, and a fold
+that takes them in writes them flat. Deltas keep commits O(new urls),
+not O(total seen); `compact_seen` folds deltas when they pile up. The
+fold is tiered so its cost also tracks the new URLs: when the deltas
+other than the largest hold fewer bytes than the largest, only those
+small deltas are folded and the large base delta is left as it is;
+otherwise everything is folded. A fold is one dropDuplicates shuffle
+whose output file count AQE sets by size.
 
 Reading state back each round also truncates DataFrame lineage — the
 iterative-loop plan would otherwise grow unboundedly.
@@ -42,7 +43,6 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from scrapy_rs_spark.schemas import (
     FRONTIER_DDL,
@@ -64,12 +64,9 @@ def _dir_bytes(path: str) -> int:
 
 
 class CrawlStore:
-    def __init__(
-        self, spark: SparkSession, root: str, seen_buckets: int = 32
-    ):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.seen_buckets = seen_buckets
         os.makedirs(self._rounds_dir(), exist_ok=True)
         self._recover_seen_delta_dirs()
 
@@ -151,38 +148,15 @@ class CrawlStore:
         to readers until MANIFEST: it lives inside the round dir). Lets
         the engine overlap the items / frontier / seen writes; pass
         seen_delta=None to commit_round afterwards."""
-        self._write_seen_buckets(
-            seen_delta.withColumn(
-                "bucket",
-                F.pmod(
-                    F.col("url_hash"), F.lit(self.seen_buckets)
-                ).cast("int"),
-            ),
-            self._seen_delta_dir(rnd),
-        )
+        self._write_seen(seen_delta, self._seen_delta_dir(rnd))
 
-    def _write_seen_buckets(
-        self, df: DataFrame, path: str, dedup: bool = False
-    ) -> None:
-        """Write (url_hash, bucket) rows partitioned by bucket. Rows are
-        clustered by bucket first, so each bucket lands in exactly one
-        writer task and one file instead of (tasks × buckets) small
-        files. Writer tasks = min(seen_buckets, defaultParallelism):
-        one task per bucket would run a round's few thousand rows as
-        several waves of tiny tasks. dedup=True drops duplicate hashes
-        in the same shuffle — the bucket is a function of url_hash, so
-        the bucket clustering already co-locates duplicates."""
-        k = max(
-            1,
-            min(
-                self.seen_buckets,
-                self.spark.sparkContext.defaultParallelism,
-            ),
-        )
-        df = df.select("url_hash", "bucket").repartition(k, F.col("bucket"))
-        if dedup:
-            df = df.dropDuplicates(["bucket", "url_hash"])
-        df.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    @staticmethod
+    def _write_seen(df: DataFrame, path: str) -> None:
+        """Write url_hash rows as plain parquet, one file per non-empty
+        input partition. No reader prunes by layout (the anti-join keys
+        on url_hash alone), so a shuffle to lay rows out would be pure
+        cost."""
+        df.select("url_hash").write.mode("overwrite").parquet(path)
 
     def commit_round(
         self,
@@ -235,8 +209,9 @@ class CrawlStore:
         rounds = self.committed_rounds()
         if upto_round is not None:
             rounds = [r for r in rounds if r <= upto_round]
-        # one read per delta (each has its own bucket= partition root);
-        # a multi-path read would trip partition-discovery conflicts
+        # one read per delta: a delta written with bucket= directories
+        # has its own partition root, and a multi-path read mixing it
+        # with flat deltas would trip partition-discovery conflicts
         deltas = [
             d for d in map(self.load_seen_delta, rounds) if d is not None
         ]
@@ -257,11 +232,13 @@ class CrawlStore:
     def load_seen_delta(self, rnd: int) -> DataFrame | None:
         """One committed round's seen delta (None if compacted away) —
         lets callers maintain an incrementally-extended seen DataFrame
-        instead of re-listing every delta directory each round."""
+        instead of re-listing every delta directory each round. Projects
+        url_hash: a delta written with bucket= directories reads back
+        with a bucket partition column."""
         p = self._seen_delta_dir(rnd)
         if not os.path.isdir(p):
             return None
-        return self.spark.read.schema(SEEN_DDL).parquet(p)
+        return self.spark.read.schema(SEEN_DDL).parquet(p).select("url_hash")
 
     def seen_generation(self) -> int:
         """Monotone counter bumped by every compact_seen. A compaction
@@ -325,7 +302,7 @@ class CrawlStore:
             union = df if union is None else union.unionByName(df)
         target_dir = self._round_dir(target)
         tmp = os.path.join(target_dir, "seen_delta_compact")
-        self._write_seen_buckets(union, tmp, dedup=True)
+        self._write_seen(union.dropDuplicates(["url_hash"]), tmp)
         old = self._seen_delta_dir(target)
         bak = os.path.join(target_dir, "seen_delta_old")
         if os.path.isdir(old):
@@ -381,8 +358,8 @@ class CrawlStore:
         gets for free on every snapshot commit (Iceberg manifests record
         exactly this: file path, partition tuple, record count, size).
         The walk is O(files-per-round), which the writers bound:
-        seen_delta is repartitioned to seen_buckets files, frontier to
-        the shuffle-partition count — ~100 footer reads per round, never
+        seen_delta and frontier write one file per non-empty partition
+        of their input — tens of footer reads per round, never
         O(data)."""
         import pyarrow.parquet as pq
 
@@ -428,7 +405,7 @@ class CrawlStore:
         """Lineage as a DataFrame — the queryable analogue of Iceberg's
         `.files` / `.manifests` metadata tables, joinable with
         metrics_df() on round for audit queries (rows written per
-        partition per round, skew of the seen delta across buckets,
+        partition per round, seen-delta files and rows per round,
         bytes committed per round)."""
         ddl = (
             "round INT, dataset STRING, partition STRING, file STRING,"

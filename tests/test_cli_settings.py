@@ -35,10 +35,14 @@ def test_settings_from_reference_keys(tmp_path):
 def test_settings_ignore_removed_keys():
     """A settings dict written for an older release still loads: a key
     that is no longer a field (the fetch broadcast gate, now the
-    engine constant FETCH_BROADCAST_MAX_BATCH) is ignored."""
-    s = Settings.from_dict({"fetch_broadcast_max_batch": 7, "MAX_DEPTH": 2})
+    engine constant FETCH_BROADCAST_MAX_BATCH; the seen-set bucket
+    count, gone with the bucketed seen layout) is ignored."""
+    s = Settings.from_dict(
+        {"fetch_broadcast_max_batch": 7, "seen_buckets": 32, "MAX_DEPTH": 2}
+    )
     assert s.max_depth == 2
     assert not hasattr(s, "fetch_broadcast_max_batch")
+    assert not hasattr(s, "seen_buckets")
 
 
 def test_cli_crawl(spark, tmp_path):

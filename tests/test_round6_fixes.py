@@ -334,12 +334,12 @@ def test_sitemap_seeds_collapse_per_url(spark):
 def test_staged_seen_delta_commit_equivalence(spark, tmp_path):
     """The round's three outputs can be staged concurrently ahead of
     commit_round (write_items/write_frontier/write_seen_delta +
-    seen_delta=None): membership, bucket layout and lineage match the
+    seen_delta=None): membership, columns and lineage match the
     single-call commit, and the staged delta stays invisible until
     MANIFEST lands."""
     from scrapy_rs_spark.sources.store import CrawlStore
 
-    store = CrawlStore(spark, str(tmp_path / "staged"), seen_buckets=4)
+    store = CrawlStore(spark, str(tmp_path / "staged"))
     _commit_seen(spark, store, 1, range(30))
 
     # round 2 staged piecewise, commit sealed with all-None
@@ -357,8 +357,7 @@ def test_staged_seen_delta_commit_equivalence(spark, tmp_path):
     assert {r.url_hash for r in store.load_seen().collect()} == set(
         range(55)
     )
-    # bucket column preserved for partition-pruned probes
-    assert {r.bucket for r in store.load_seen().collect()} <= {0, 1, 2, 3}
+    assert store.load_seen().columns == ["url_hash"]
     # lineage recorded the staged delta's files like a direct commit
     rows = [
         r for r in store.load_lineage()

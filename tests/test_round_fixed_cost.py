@@ -1,5 +1,5 @@
 """A crawl round's fixed cost: the fused parse UDF, tiered seen
-compaction and bucket-clustered seen writes."""
+compaction and shuffle-free flat seen writes."""
 
 import html as htmllib
 import os
@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.functions import pandas_udf
 
+import scrapy_rs_spark.functions.text as text_mod
 import scrapy_rs_spark.plans.engine as engine_mod
 from scrapy_rs_spark.functions.text import (
     _PAGE_STRUCT,
@@ -182,6 +183,37 @@ def test_fused_parse_matches_chain_on_edge_corpus(spark):
     assert by_url["http://u.test/p"].p.links == kept
 
 
+def test_fused_parse_skips_resolution_for_null_base(monkeypatch):
+    """A links hook owns the links column, so the engine passes the
+    fused parse a NULL base: its rows get links [] without a call of
+    resolve_series, and the per-request encoding still decodes the
+    text. Calls the UDF's Python function on the driver."""
+    calls = []
+    real = text_mod.resolve_series
+
+    def counting(base, href):
+        calls.append(len(href))
+        return real(base, href)
+
+    monkeypatch.setattr(text_mod, "resolve_series", counting)
+    rows = [
+        _page("http://jp.test/a/", ["/日本", "b"], encoding="shift_jis"),
+        _page("http://u.test/p", _MIXED_HREFS),
+    ]
+    html = pd.Series([r[3] for r in rows])
+    encoding = pd.Series([r[4] for r in rows], dtype=object)
+    run = parse_resolve_udf.func
+    out = run(html, encoding, pd.Series([None, None], dtype=object))
+    assert calls == []
+    assert out["links"].tolist() == [[], []]
+    assert out["text"].tolist()[0].startswith("http://jp.test/a/")
+    # with a base, the batch's hrefs resolve in one call
+    resolved = run(html, encoding, pd.Series([r[0] for r in rows]))
+    assert len(calls) == 1
+    assert resolved["text"].tolist() == out["text"].tolist()
+    assert resolved["links"].tolist()[0][-1] == "http://jp.test/a/b"
+
+
 def test_candidates_plan_has_no_python_eval(spark, tmp_path, monkeypatch):
     """Link resolution happens inside the parse UDF, whose output is
     checkpointed: the candidates plan that feeds the seen anti-join
@@ -240,7 +272,7 @@ def test_compact_seen_leaves_dominant_base_untouched(
     they are folded, into the newest of them; the base delta's files
     are not rewritten (whether the base is the oldest or the newest
     delta)."""
-    store = CrawlStore(spark, str(tmp_path / "s"), seen_buckets=4)
+    store = CrawlStore(spark, str(tmp_path / "s"))
     small = [r for r in range(1, 5) if r != base_round]
     _commit(store, spark, base_round, 0, 20_000)
     for r in small:
@@ -260,7 +292,7 @@ def test_compact_seen_leaves_dominant_base_untouched(
 def test_compact_seen_folds_everything_when_small_deltas_outgrow_base(
     spark, tmp_path
 ):
-    store = CrawlStore(spark, str(tmp_path / "s"), seen_buckets=4)
+    store = CrawlStore(spark, str(tmp_path / "s"))
     _commit(store, spark, 1, 0, 3_000)
     for r in range(2, 6):
         _commit(store, spark, r, r * 10_000, r * 10_000 + 1_500)
@@ -279,7 +311,7 @@ def test_compact_seen_folds_everything_when_small_deltas_outgrow_base(
 def test_compact_seen_drops_duplicates_in_folded_set(spark, tmp_path):
     """A crash window can leave the same url_hash in two deltas; the
     fold keeps one row per hash."""
-    store = CrawlStore(spark, str(tmp_path / "s"), seen_buckets=4)
+    store = CrawlStore(spark, str(tmp_path / "s"))
     for rnd in (1, 2, 3):
         _commit(store, spark, rnd, (rnd - 1) * 50, (rnd - 1) * 50 + 100)
     store.compact_seen()
@@ -297,7 +329,7 @@ def test_plain_compaction_swap_crash_recovered_on_open(
     written fold, else from the backup) so no hash drops out of the
     seen set."""
     root = str(tmp_path / "s")
-    store = CrawlStore(spark, root, seen_buckets=4)
+    store = CrawlStore(spark, root)
     for rnd in (1, 2, 3):
         _commit(store, spark, rnd, rnd * 1_000, rnd * 1_000 + 500)
     expect = _seen_hashes(store)
@@ -306,13 +338,14 @@ def test_plain_compaction_swap_crash_recovered_on_open(
         union = store.load_seen_delta(1)
         for rnd in (2, 3):
             union = union.unionByName(store.load_seen_delta(rnd))
-        store._write_seen_buckets(
-            union, os.path.join(target, "seen_delta_compact"), dedup=True
+        store._write_seen(
+            union.dropDuplicates(["url_hash"]),
+            os.path.join(target, "seen_delta_compact"),
         )
     os.replace(
         store._seen_delta_dir(3), os.path.join(target, "seen_delta_old")
     )
-    reopened = CrawlStore(spark, root, seen_buckets=4)
+    reopened = CrawlStore(spark, root)
     assert 3 in reopened.seen_delta_rounds()
     assert sorted(os.listdir(target)) == sorted(
         os.listdir(os.path.dirname(store._seen_delta_dir(2)))
@@ -360,39 +393,41 @@ def test_engine_seen_cache_rebuilt_after_tiered_compaction(spark, tmp_path):
     assert eng._seen_cache_rounds == eng.store.seen_delta_rounds()
 
 
-# ---- bucket-clustered seen writes ----
+# ---- flat seen writes ----
 
-@pytest.mark.parametrize("buckets", [2, 8])
-def test_seen_writes_one_file_per_bucket(spark, tmp_path, buckets):
-    """write_seen_delta (and the compaction fold) write each non-empty
-    bucket as exactly one file, whether the bucket count is below or
-    above the writer-task count."""
-    store = CrawlStore(spark, str(tmp_path / "s"), seen_buckets=buckets)
+def test_seen_writes_are_flat_and_shuffle_free(spark, tmp_path):
+    """write_seen_delta writes its input's partitions as they are: no
+    bucket= directory, at most one parquet file per input partition,
+    one Spark job of one stage. The compaction fold writes flat too."""
+    store = CrawlStore(spark, str(tmp_path / "s"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
 
-    def files_per_bucket(rnd):
-        d = store._seen_delta_dir(rnd)
-        return {
-            b: [f for f in os.listdir(os.path.join(d, b))
-                if f.endswith(".parquet")]
-            for b in os.listdir(d) if b.startswith("bucket=")
-        }
+    def parquet_files(path):
+        names = [n for n in os.listdir(path) if not n.startswith(("_", "."))]
+        assert names and all(n.endswith(".parquet") for n in names), names
+        return names
 
     for rnd in (1, 2, 3):
         store.begin_round(rnd)
-        store.write_seen_delta(
-            rnd,
-            spark.range(rnd * 5_000, rnd * 5_000 + 3_000, numPartitions=7)
-            .select(F.col("id").alias("url_hash")),
-        )
+        group = f"seen_write_{rnd}_{id(store)}"
+        sc.setJobGroup(group, "write_seen_delta")
+        try:
+            store.write_seen_delta(
+                rnd,
+                spark.range(rnd * 5_000, rnd * 5_000 + 3_000, numPartitions=7)
+                .select(F.col("id").alias("url_hash")),
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         store.commit_round(rnd, None, None, None, None, {"round": rnd},
                            clean=False)
-        per = files_per_bucket(rnd)
-        assert len(per) == buckets
-        assert all(len(fs) == 1 for fs in per.values())
+        assert len(parquet_files(store._seen_delta_dir(rnd))) <= 7
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(group)
+        assert len(jobs) == 1
+        assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
     store.compact_seen()  # three equal deltas: everything is folded
     assert store.seen_delta_rounds() == {3}
-    per = files_per_bucket(3)
-    assert len(per) == buckets
-    assert all(len(fs) == 1 for fs in per.values())
+    parquet_files(store._seen_delta_dir(3))
     assert store.load_seen().count() == 9_000
-
