@@ -395,7 +395,8 @@ def test_engine_seen_cache_rebuilt_after_tiered_compaction(spark, tmp_path):
 
 # ---- flat seen writes ----
 
-def test_seen_writes_are_flat_and_shuffle_free(spark, tmp_path):
+@pytest.mark.parametrize("parts", [2, 8])
+def test_seen_writes_are_flat_and_shuffle_free(spark, tmp_path, parts):
     """write_seen_delta writes its input's partitions as they are: no
     bucket= directory, at most one parquet file per input partition,
     one Spark job of one stage. The compaction fold writes flat too."""
@@ -415,14 +416,15 @@ def test_seen_writes_are_flat_and_shuffle_free(spark, tmp_path):
         try:
             store.write_seen_delta(
                 rnd,
-                spark.range(rnd * 5_000, rnd * 5_000 + 3_000, numPartitions=7)
+                spark.range(rnd * 5_000, rnd * 5_000 + 3_000,
+                            numPartitions=parts)
                 .select(F.col("id").alias("url_hash")),
             )
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         store.commit_round(rnd, None, None, None, None, {"round": rnd},
                            clean=False)
-        assert len(parquet_files(store._seen_delta_dir(rnd))) <= 7
+        assert len(parquet_files(store._seen_delta_dir(rnd))) <= parts
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = tracker.getJobIdsForGroup(group)
         assert len(jobs) == 1
