@@ -175,19 +175,10 @@ class CrawlEngine:
         self._pause_requested = False
         self._stop_requested = False
         self._resume_event = threading.Event()
-        # incrementally-extended seen DataFrame: store.load_seen()
-        # builds one file index per delta directory on each call, so
-        # every committed delta is re-listed every round. The cache
-        # unions only NEW rounds' deltas onto the existing DataFrame
-        # (whose file indexes Spark already holds) and rebuilds after
-        # compaction prunes cached paths.
-        self._seen_df_cache: DataFrame | None = None
-        self._seen_cache_rounds: set[int] = set()
         # running seen-set size (cumulative seen-delta rows) for the
         # METRICS_SCHEMA seen_size field; re-derived from committed
         # metrics at resume()
         self._seen_total: int = 0
-        self._seen_cache_gen: int = -1
         # T4: driver-side resource controller (engine/src/lib.rs:155-157
         # creates one iff config.enable_resource_monitoring) — sampled
         # and throttle-checked at round boundaries, where the loop can
@@ -248,35 +239,6 @@ class CrawlEngine:
                     F.col("crawl_delay_ms") > F.lit(s.round_duration_ms)
                 ).isEmpty()
         return self._long_delays_flag
-
-    def _load_seen(self) -> DataFrame:
-        """The committed seen set, via the incremental cache (see
-        __init__). Semantically identical to store.load_seen(); costs
-        one directory listing for the newest delta instead of one per
-        committed delta per round."""
-        valid = self.store.seen_delta_rounds()
-        gen = self.store.seen_generation()
-        if (
-            self._seen_df_cache is None
-            or not (self._seen_cache_rounds <= valid)
-            or gen != self._seen_cache_gen
-        ):
-            # first use, compaction removed a cached delta dir, or the
-            # generation moved (compact_seen rewrites the NEWEST delta
-            # dir IN PLACE — invisible to the round-set key; an external
-            # store.compact_seen() between runs would otherwise leave the
-            # cache pointing at deleted parquet) — rebuild from scratch
-            # (one full listing, ≤16 deltas + base)
-            self._seen_df_cache = self.store.load_seen()
-            self._seen_cache_rounds = valid
-            self._seen_cache_gen = gen
-            return self._seen_df_cache
-        for r in sorted(valid - self._seen_cache_rounds):
-            delta = self.store.load_seen_delta(r)
-            if delta is not None:
-                self._seen_df_cache = self._seen_df_cache.unionByName(delta)
-            self._seen_cache_rounds.add(r)
-        return self._seen_df_cache
 
     def _cap_left_col(self):
         """Remaining lifetime per-domain budget (F6). Unlike the delay
@@ -457,9 +419,11 @@ class CrawlEngine:
             budget = self._host_budget_col(served, rnd)
             # ONE rank yields batch and leftover. Salting only pays once
             # a hot host can outgrow a task: below the threshold the rank
-            # is a single window per host. Lazy checkpoint: materialized
-            # by the round's FIRST action (the counter agg reads batch →
-            # ranked), so rank+cache+count land in one Spark job
+            # is a single window per host. The checkpoint is lazy only
+            # above its exchange: under AQE, building it runs the rank's
+            # shuffle-map stage at once; the round's first action (the
+            # counter agg reads batch → ranked) runs the Window and
+            # caches its rows
             ranked = rank_per_host(
                 allowed.withColumn("__budget", budget),
                 F.col("__budget"),
@@ -484,8 +448,11 @@ class CrawlEngine:
             batch = self.request_middlewares(batch)  # X2
         if unlimited or shrinks:
             # a budget-only batch is a filter over the ranked checkpoint;
-            # any other batch is checkpointed here, lazily — the counter
-            # agg below materializes it for every later consumer
+            # any other batch is checkpointed here. Its plan (a filter and
+            # the capped top-k) holds no AQE exchange, so nothing runs
+            # until the counter agg below caches it for every later
+            # consumer; a middleware that shuffles would run that shuffle
+            # when the checkpoint is built
             batch = batch.localCheckpoint(eager=False)
         if shrinks:
             # eligible rows that page_limit or a middleware dropped stay
@@ -565,10 +532,14 @@ class CrawlEngine:
         # ---- seen anti-join (J1) ----
         # one materialization — candidates feed the count, the seen delta,
         # and the frontier commit; without this the parse-UDF chain would
-        # recompute 3-4× per round. Lazy: the frontier write below is the
-        # materializing action
+        # recompute 3-4× per round. The seen set is read from the store
+        # every round, one scan over all committed deltas. Not lazy under
+        # AQE: building the checkpoint runs the stages below its
+        # exchanges (the parse and in-batch dedup map side, the seen
+        # scan) on the spot; the frontier write below runs the
+        # anti-join's last stage and caches the rows
         candidates = (
-            anti_join_seen(candidates, self._load_seen())
+            anti_join_seen(candidates, self.store.load_seen())
             .select(*FRONTIER_COLS)
             .localCheckpoint(eager=False)
         )
@@ -633,13 +604,13 @@ class CrawlEngine:
             "new_urls": 0,  # filled below
         }
         # frontier staged next (still invisible until MANIFEST): its
-        # write is the action that materializes the candidates
-        # checkpoint, and an Observation riding it returns BOTH the
-        # committed frontier size and the new-URL count — within this
-        # round, candidate rows (parsed links + redirects, post
-        # filter/dedup/anti-join) are exactly the discovery_round ==
-        # rnd+1 rows of the union; leftover/gated/retry rows are all
-        # older. This replaces the standalone candidates.count() job AND
+        # write runs the candidates checkpoint's last stage (the stages
+        # below its exchanges ran when it was built), and an Observation
+        # riding it returns BOTH the committed frontier size and the
+        # new-URL count — within this round, candidate rows (parsed
+        # links + redirects, post filter/dedup/anti-join) are exactly
+        # the discovery_round == rnd+1 rows of the union;
+        # leftover/gated/retry rows are all older. This replaces the standalone candidates.count() job AND
         # the crawl loop's per-round frontier.isEmpty() probe — two
         # driver round-trips off the fixed per-round job floor.
         obs_fr = Observation(f"frontier_r{rnd}")
@@ -945,12 +916,9 @@ class CrawlEngine:
             if self.settings.max_requests_per_domain is not None:
                 served = self.store.load_host_served(committed)
             if committed % self.settings.seen_compact_every == 0:
-                # keep the seen-set one read wide (deltas pile up 1/round)
+                # keep the seen scan a few directories wide (deltas
+                # pile up one per round)
                 self.store.compact_seen()
-                # compaction deleted the cached delta dirs — drop the
-                # cache so the next round rebuilds from the folded base
-                self._seen_df_cache = None
-                self._seen_cache_rounds = set()
             rnd = committed
             if m["requests"] == 0 and m["new_urls"] == 0:
                 # the round served nothing: fast-forward to the earliest

@@ -45,8 +45,11 @@ def fetch_round(
     Crawl-delay feeds strict pacing, or None when only the configured
     delay applies.
 
-    Lazily checkpointed: the caller's first action materializes the
-    join once and every later consumer reads the cached partitions."""
+    Checkpointed, lazily only above the join's exchange: under AQE,
+    building the checkpoint runs the broadcast of the batch (or the
+    sort-merge join's shuffles) at once; the caller's first action runs
+    the join once and every later consumer reads the cached
+    partitions."""
     s = settings
     delay = max(s.domain_delay_ms, s.download_delay_ms)
     # strict mode (T1 fidelity, slot.rs:127-137): pace ONLY the frame
@@ -155,9 +158,12 @@ def expand_round(
     else:
         fields = F.lit(None).cast("map<string,string>")
     # ONE parse select, materialized once (html dropped immediately
-    # after): the items write materializes it and the link expansion
-    # reads the cached result. The fused extractor yields text + links
-    # RESOLVED in one UDF pass per page; a hook replaces just its own
+    # after): the items write runs the parse and the link expansion
+    # reads the cached result. With the broadcast-batch join the plan
+    # under this checkpoint has no exchange and building it runs
+    # nothing; after a sort-merge join, building it runs the
+    # repartition's shuffle under AQE. The fused extractor yields text +
+    # links RESOLVED in one UDF pass per page; a hook replaces just its own
     # column, and parse_resolve_udf runs only while a default column is
     # still needed. Links are resolved inside the UDF that yields the
     # array on purpose: a urljoin_udf over the exploded links would be

@@ -18,12 +18,16 @@ an Iceberg snapshot commit; resume reads the max committed round
 (reference analogue: EngineState save/load,
 /root/reference/engine/src/lib.rs:1196-1252).
 
-Seen-set = union of seen_delta across committed rounds. A delta holds
+Seen-set = every committed round's seen_delta, read by `load_seen` as
+one parquet scan over all the delta directories; the engine's anti-join
+calls it every round and keeps no copy of its own. A delta holds
 url_hash only, written from its input's partitions as they are (no
-shuffle); the engine's anti-join keys on url_hash alone, so no on-disk
+shuffle); the anti-join keys on url_hash alone, so no on-disk
 partitioning would be read. Deltas written with the older ``bucket=``
-partition directories still load: reads project url_hash, and a fold
-that takes them in writes them flat. Deltas keep commits O(new urls),
+partition directories still load in the same scan (it looks up files
+recursively, with no partition discovery), and a fold that takes them
+in writes them flat. A ``seen_generation`` file left at the store root
+by an older version is ignored. Deltas keep commits O(new urls),
 not O(total seen); `compact_seen` folds deltas when they pile up. The
 fold is tiered so its cost also tracks the new URLs: when the deltas
 other than the largest hold fewer bytes than the largest, only those
@@ -37,7 +41,6 @@ iterative-loop plan would otherwise grow unboundedly.
 
 from __future__ import annotations
 
-import functools
 import json
 import os
 import shutil
@@ -204,25 +207,34 @@ class CrawlStore:
             os.path.join(self._round_dir(rnd), "frontier")
         )
 
-    def load_seen(self, upto_round: int | None = None) -> DataFrame:
-        """Union of committed seen deltas ≤ upto_round."""
-        rounds = self.committed_rounds()
-        if upto_round is not None:
-            rounds = [r for r in rounds if r <= upto_round]
-        # one read per delta: a delta written with bucket= directories
-        # has its own partition root, and a multi-path read mixing it
-        # with flat deltas would trip partition-discovery conflicts
-        deltas = [
-            d for d in map(self.load_seen_delta, rounds) if d is not None
-        ]
-        if not deltas:
+    def load_seen(self) -> DataFrame:
+        """The committed seen set: ONE parquet scan over every
+        seen_delta directory, whatever their number or layout. The
+        engine's anti-join calls this every round; the scan lists each
+        delta directory once per call, which the compaction cadence
+        keeps a few directories wide."""
+        rounds = sorted(self.seen_delta_rounds())
+        if not rounds:
             return self.spark.createDataFrame([], SEEN_DDL)
-        return functools.reduce(DataFrame.unionByName, deltas)
+        return self._read_seen(*map(self._seen_delta_dir, rounds))
+
+    def _read_seen(self, *paths: str) -> DataFrame:
+        """url_hash rows of seen-delta directories, as one scan.
+        recursiveFileLookup turns partition discovery off, so no bucket
+        column is read back and the schema is url_hash alone: a delta
+        written with the older bucket= directories has its own partition
+        root, and a multi-path read mixing it with flat deltas would
+        otherwise fail on conflicting directory structures. Files whose
+        names start with _ or . (_SUCCESS, .crc) are skipped."""
+        return (
+            self.spark.read.schema(SEEN_DDL)
+            .option("recursiveFileLookup", "true")
+            .parquet(*paths)
+        )
 
     def seen_delta_rounds(self) -> set[int]:
         """Committed rounds whose seen_delta directory still exists
-        (compaction prunes earlier ones). The store owns the layout —
-        callers maintaining incremental seen caches key off this."""
+        (compaction prunes earlier ones)."""
         return {
             r
             for r in self.committed_rounds()
@@ -230,36 +242,12 @@ class CrawlStore:
         }
 
     def load_seen_delta(self, rnd: int) -> DataFrame | None:
-        """One committed round's seen delta (None if compacted away) —
-        lets callers maintain an incrementally-extended seen DataFrame
-        instead of re-listing every delta directory each round. Projects
-        url_hash: a delta written with bucket= directories reads back
-        with a bucket partition column."""
+        """One committed round's seen delta (None if compacted away),
+        read like load_seen."""
         p = self._seen_delta_dir(rnd)
         if not os.path.isdir(p):
             return None
-        return self.spark.read.schema(SEEN_DDL).parquet(p).select("url_hash")
-
-    def seen_generation(self) -> int:
-        """Monotone counter bumped by every compact_seen. A compaction
-        rewrites the NEWEST round's seen_delta dir IN PLACE, which a
-        caller's round-set cache key cannot see (the set of delta dirs is
-        unchanged) — cached DataFrames would point at deleted parquet
-        files. Cache the generation alongside the round set and rebuild
-        when it moves."""
-        p = os.path.join(self.root, "seen_generation")
-        try:
-            with open(p) as f:
-                return int(f.read().strip() or 0)
-        except (FileNotFoundError, ValueError):
-            return 0
-
-    def _bump_seen_generation(self) -> None:
-        p = os.path.join(self.root, "seen_generation")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(self.seen_generation() + 1))
-        os.replace(tmp, p)
+        return self._read_seen(p)
 
     def compact_seen(self) -> None:
         """Fold committed seen deltas (Iceberg analogue:
@@ -276,13 +264,13 @@ class CrawlStore:
         window, see below) survives until an all-fold, which is
         harmless to anti-join membership.
 
-        Keeps load_seen a few reads wide instead of O(rounds).
-        Crash-safe by ordering: the folded union is written to a side
-        dir first, swapped into the target round, THEN the other folded
-        deltas are removed — a crash between swap and removal only
-        leaves duplicate url_hash rows. Bumps seen_generation() last so
-        incremental-cache holders notice the in-place rewrite of the
-        target delta dir."""
+        Keeps load_seen's scan a few directories wide instead of
+        O(rounds). Crash-safe by ordering: the folded set is written to
+        a side dir first, swapped into the target round, THEN the other
+        folded deltas are removed — a crash between swap and removal
+        only leaves duplicate url_hash rows. Every load_seen call lists
+        the directories afresh, so the in-place rewrite of the target
+        delta needs no signal to readers."""
         sizes = {
             r: _dir_bytes(self._seen_delta_dir(r))
             for r in self.seen_delta_rounds()
@@ -296,13 +284,10 @@ class CrawlStore:
         if len(fold) < 2:
             return
         target = fold[-1]
-        union = None
-        for r in fold:
-            df = self.load_seen_delta(r)
-            union = df if union is None else union.unionByName(df)
+        folded = self._read_seen(*map(self._seen_delta_dir, fold))
         target_dir = self._round_dir(target)
         tmp = os.path.join(target_dir, "seen_delta_compact")
-        self._write_seen(union.dropDuplicates(["url_hash"]), tmp)
+        self._write_seen(folded.dropDuplicates(["url_hash"]), tmp)
         old = self._seen_delta_dir(target)
         bak = os.path.join(target_dir, "seen_delta_old")
         if os.path.isdir(old):
@@ -311,7 +296,6 @@ class CrawlStore:
         shutil.rmtree(bak, ignore_errors=True)
         for r in fold[:-1]:
             shutil.rmtree(self._seen_delta_dir(r), ignore_errors=True)
-        self._bump_seen_generation()
 
     def load_host_served(self, rnd: int) -> DataFrame:
         p = os.path.join(self._round_dir(rnd), "host_served")

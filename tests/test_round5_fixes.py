@@ -1,6 +1,7 @@
 """Round-5 fixes & features: empty-pairs convergence in dedup_clusters,
-NULL-priority sentinel outside int32, seen-cache generation marker,
-skew-safe lsh_star_edges, Settings.from_module, bounded close lifecycle.
+NULL-priority sentinel outside int32, seen membership across an
+external compaction, skew-safe lsh_star_edges, Settings.from_module,
+bounded close lifecycle.
 
 Reference anchors: python/src/lib.rs:1065-1075 (PySettings.from_module),
 engine/src/lib.rs:1285-1420 (close hooks each bounded by 5 s timeouts).
@@ -78,13 +79,14 @@ def test_null_priority_strictly_loses_to_int_min(spark):
     assert got[0].url == "http://a.test/y"  # INT_MIN beats NULL
 
 
-# ---- ADVICE r4 (low): compact_seen generation marker ----
+# ---- ADVICE r4 (low): compaction outside the engine's cadence ----
 
 def test_external_compact_invalidates_seen_cache(spark, tmp_path):
     """store.compact_seen() called OUTSIDE the engine's own cadence
-    rewrites the newest delta dir in place; the engine's cached seen
-    DataFrame must notice (generation marker) instead of reading
-    deleted parquet files / stale membership."""
+    rewrites the newest delta dir in place and deletes the others; the
+    engine's seen set must read the folded deltas, not deleted parquet
+    files or stale membership, and a resumed crawl fetches no page
+    twice."""
     from scrapy_rs_spark.sources.mocksite import mock_site_pages
 
     pages = mock_site_pages(spark, page_count=60, links_per_page=3)
@@ -98,14 +100,13 @@ def test_external_compact_invalidates_seen_cache(spark, tmp_path):
         store_path=str(tmp_path / "store"),
     )
     eng.run(["http://mocksite.test/0"], max_rounds=4)
-    before = eng._load_seen().count()  # populates the cache
+    before = eng.seen().count()
     assert before > 0
-    gen0 = eng.store.seen_generation()
     eng.store.compact_seen()  # external compaction between runs
-    assert eng.store.seen_generation() == gen0 + 1
-    # without the generation check this collect hits deleted files
-    after = eng._load_seen().count()
-    assert after == before
+    assert eng.seen().count() == before
+    stats = eng.resume()
+    items = [r.url for r in eng.items().collect()]
+    assert len(items) == len(set(items)) == stats.requests
 
 
 # ---- skew-safe lsh_star_edges (VERDICT r4 ask #3) ----

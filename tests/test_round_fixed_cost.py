@@ -279,11 +279,9 @@ def test_compact_seen_leaves_dominant_base_untouched(
         _commit(store, spark, r, 100_000 + r * 10, 100_000 + r * 10 + 10)
     expect = _seen_hashes(store)
     base_files = _delta_files(store, base_round)
-    gen0 = store.seen_generation()
     store.compact_seen()
     assert _delta_files(store, base_round) == base_files
     assert store.seen_delta_rounds() == {base_round, small[-1]}
-    assert store.seen_generation() == gen0 + 1
     assert _seen_hashes(store) == expect
     folded = {r.url_hash for r in store.load_seen_delta(small[-1]).collect()}
     assert folded == {h for h in expect if h >= 100_000}
@@ -300,11 +298,9 @@ def test_compact_seen_folds_everything_when_small_deltas_outgrow_base(
     store.compact_seen()
     assert store.seen_delta_rounds() == {5}
     assert _seen_hashes(store) == expect
-    # a lone delta has nothing to fold: no rewrite, no generation bump
-    gen = store.seen_generation()
+    # a lone delta has nothing to fold: no rewrite
     files = _delta_files(store, 5)
     store.compact_seen()
-    assert store.seen_generation() == gen
     assert _delta_files(store, 5) == files
 
 
@@ -356,11 +352,11 @@ def test_plain_compaction_swap_crash_recovered_on_open(
     assert _seen_hashes(reopened) == expect
 
 
-def test_engine_seen_cache_rebuilt_after_tiered_compaction(spark, tmp_path):
+def test_engine_seen_exact_across_tiered_compaction(spark, tmp_path):
     """A crawl resumed on a store with a large preloaded seen delta:
-    the engine's own compaction leaves the base alone, the seen cache
-    is rebuilt from the folded deltas, and membership stays exact (the
-    crawl fetches every page once and seen = preload + discovered)."""
+    the engine's own compaction leaves the base alone, and membership
+    stays exact across the folds (the crawl fetches every page once
+    and seen = preload + discovered)."""
     # 30 pages, 15 links: rounds 2-4 fetch 1, 15, 14 pages; the engine
     # compacts after rounds 2 and 4
     n_pages, preload = 30, 20_000
@@ -384,13 +380,10 @@ def test_engine_seen_cache_rebuilt_after_tiered_compaction(spark, tmp_path):
     eng = CrawlEngine(spark, pages, settings, store_path=root)
     stats = eng.resume()
     assert [m["requests"] for m in stats.per_round[2:]] == [1, 15, 14]
-    assert eng.store.seen_generation() == 2
     assert _delta_files(eng.store, 1) == base_files
     items = [r.url for r in eng.items().collect()]
     assert len(items) == len(set(items)) == n_pages
-    assert eng._load_seen().count() == preload + n_pages
-    assert eng._seen_cache_gen == eng.store.seen_generation()
-    assert eng._seen_cache_rounds == eng.store.seen_delta_rounds()
+    assert eng.seen().count() == preload + n_pages
 
 
 # ---- flat seen writes ----

@@ -144,6 +144,9 @@ def test_seen_deltas_of_both_layouts_mix(spark, tmp_path):
     seen = eng.store.load_seen()
     assert seen.columns == ["url_hash"]
     assert sorted(r.url_hash for r in seen.collect()) == before
+    # both layouts are read by ONE parquet scan, not a union of scans
+    plan = seen._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation ") == 1 and "Union" not in plan
 
     # round 2 anti-joins against the bucketed deltas, writes a flat one
     eng.resume(max_rounds=2)
